@@ -191,8 +191,11 @@ def write_transcripts_parquet(
     split per task but a task only reads row groups whose midpoint falls
     in its range, so a 16-file table caps every scan stage at 16 tasks
     regardless of core count (guide §6: input split size). Multiple row
-    groups let ``spark.sql.files.minPartitionNum`` (session.py) actually
-    subdivide the files. The marker records the layout; a cache written
+    groups let Spark's byte-range splits actually subdivide the files: a
+    split is total bytes / ``spark.default.parallelism`` (2x the cores,
+    session.py), capped by ``spark.sql.files.maxPartitionBytes`` (16m)
+    and floored at ``spark.sql.files.openCostInBytes`` (4 MB default).
+    The marker records the layout; a cache written
     by an older layout is regenerated in place (same data — seed-derived
     — different physical chunking)."""
     import os

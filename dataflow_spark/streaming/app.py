@@ -26,8 +26,9 @@ queries (shared source directory, independent checkpoints):
    function, so the union of per-batch outputs byte-matches the one-shot
    batch query on the same input — the contract test_streaming_app pins.
 
-A JsonlMetricsListener records per-batch progress; each sink records
-per-batch per-partition lineage. Everything restarts from checkpoints.
+A JsonlMetricsListener records the six queries' per-batch progress and
+leaves the session when they stop; each sink records per-batch
+per-partition lineage. Everything restarts from checkpoints.
 """
 
 from __future__ import annotations
@@ -317,42 +318,45 @@ class TranscriptsApp:
         ).withColumn("batch_id", F.lit(int(batch_id)))
 
     def start(self, spark: SparkSession, available_now: bool = True):
-        listener = JsonlMetricsListener(os.path.join(self.out_dir, "metrics.jsonl"))
-        spark.streams.addListener(listener)
+        # records only these six queries, and leaves the session once they
+        # have all stopped
+        listener = JsonlMetricsListener(
+            os.path.join(self.out_dir, "metrics.jsonl"), spark.streams
+        )
+        trigger = {"availableNow": True} if available_now else {"processingTime": "10 seconds"}
 
+        def launch(df, name, foreach_batch):
+            listener.expecting = name
+            try:
+                return (
+                    df.writeStream.queryName(name)
+                    .foreachBatch(foreach_batch)
+                    .option("checkpointLocation", os.path.join(self.out_dir, f"ck_{name}"))
+                    .trigger(**trigger)
+                    .start()
+                )
+            finally:
+                listener.expecting = None
+
+        try:
+            return self._start_queries(spark, launch)
+        finally:
+            listener.seal()
+
+    def _start_queries(self, spark: SparkSession, launch):
         def stream():
             return file_stream(spark, self.src_dir, self.max_files_per_trigger)
 
-        trigger = {"availableNow": True} if available_now else {"processingTime": "10 seconds"}
-
         cleaned = apply_filters(apply_refiners(stream(), self.refiners), self.filters)
-        q1 = (
-            cleaned.writeStream.queryName("clean")
-            .foreachBatch(self.clean_sink.foreach_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_clean"))
-            .trigger(**trigger)
-            .start()
-        )
+        q1 = launch(cleaned, "clean", self.clean_sink.foreach_batch)
         assembled = assemble_conversations(
             apply_refiners(stream(), self.refiners),
             gap_seconds=self.gap_seconds,
             watermark=self.watermark,
         )
-        q2 = (
-            assembled.writeStream.queryName("assembly")
-            .foreachBatch(self.assembly_sink.foreach_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_assembly"))
-            .trigger(**trigger)
-            .start()
-        )
+        q2 = launch(assembled, "assembly", self.assembly_sink.foreach_batch)
         paired = join_user_responses(stream(), max_response_seconds=300)
-        q3 = (
-            paired.writeStream.queryName("pairs")
-            .foreachBatch(self.pairs_sink.foreach_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_pairs"))
-            .trigger(**trigger)
-            .start()
-        )
+        q3 = launch(paired, "pairs", self.pairs_sink.foreach_batch)
         from dataflow_spark.streaming.dedup import StreamingFirstWinsDedup
 
         self._dedup = StreamingFirstWinsDedup(
@@ -381,13 +385,7 @@ class TranscriptsApp:
             ranked = with_order_rank(bdf, ["ts", "turn_idx", "conv_id"], "__ord")
             self._dedup.process_batch(ranked, batch_id)
 
-        q4 = (
-            refined.writeStream.queryName("dedup")
-            .foreachBatch(_dedup_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_dedup"))
-            .trigger(**trigger)
-            .start()
-        )
+        q4 = launch(refined, "dedup", _dedup_batch)
 
         # 5. scored: train-once models, score-and-band-filter each batch
         self.train_models(spark)
@@ -396,13 +394,7 @@ class TranscriptsApp:
         def _score_batch(bdf, batch_id):
             self.scored_sink.foreach_batch(self.score_df(bdf), batch_id)
 
-        q5 = (
-            to_score.writeStream.queryName("scored")
-            .foreachBatch(_score_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_scored"))
-            .trigger(**trigger)
-            .start()
-        )
+        q5 = launch(to_score, "scored", _score_batch)
 
         # 6. signal metrics: one additive summary row of the fused
         # quality-signal bundle per micro-batch, exactly-once by batch_id
@@ -413,13 +405,7 @@ class TranscriptsApp:
                 self.signal_summary_df(bdf, batch_id), batch_id
             )
 
-        q6 = (
-            to_signal.writeStream.queryName("signals")
-            .foreachBatch(_signal_batch)
-            .option("checkpointLocation", os.path.join(self.out_dir, "ck_signals"))
-            .trigger(**trigger)
-            .start()
-        )
+        q6 = launch(to_signal, "signals", _signal_batch)
         return [q1, q2, q3, q4, q5, q6]
 
     def run_to_completion(self, spark: SparkSession, timeout: int = 600):

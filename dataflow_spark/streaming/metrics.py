@@ -6,20 +6,55 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from pyspark.sql.streaming import StreamingQueryListener
 
 
 class JsonlMetricsListener(StreamingQueryListener):
-    def __init__(self, path: str):
+    """Records the queries its owner starts, and removes itself from the
+    session once they have all terminated.
+
+    A listener sees every query in the session, so it adopts a query only
+    when the query's start event names the query its owner is starting
+    (``expecting``). Spark delivers that event synchronously, before
+    ``DataStreamWriter.start()`` returns, so the owner sets ``expecting``
+    around each ``start()`` from one thread and calls ``seal()`` when it
+    has started them all.
+    """
+
+    def __init__(self, path: str, streams):
         self.path = path
+        self.streams = streams
+        self.expecting: str | None = None
+        self._live: set[str] = set()
+        self._ids: set[str] = set()
+        self._sealed = False
+        self._lock = threading.Lock()
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+        streams.addListener(self)
+
+    def seal(self) -> None:
+        """No more queries will be adopted; remove the listener once the
+        adopted ones have terminated (now, if they already have)."""
+        with self._lock:
+            self._sealed = True
+            done = not self._live
+        if done:
+            self.streams.removeListener(self)
 
     def onQueryStarted(self, event) -> None:
+        with self._lock:
+            if self._sealed or event.name != self.expecting:
+                return
+            self._ids.add(str(event.id))
+            self._live.add(str(event.id))
         self._write({"event": "started", "id": str(event.id), "name": event.name})
 
     def onQueryProgress(self, event) -> None:
         p = event.progress
+        if str(p.id) not in self._ids:
+            return
         self._write(
             {
                 "event": "progress",
@@ -42,7 +77,15 @@ class JsonlMetricsListener(StreamingQueryListener):
         )
 
     def onQueryTerminated(self, event) -> None:
-        self._write({"event": "terminated", "id": str(event.id), "exception": event.exception})
+        qid = str(event.id)
+        if qid not in self._ids:
+            return
+        self._write({"event": "terminated", "id": qid, "exception": event.exception})
+        with self._lock:
+            self._live.discard(qid)
+            done = self._sealed and not self._live
+        if done:
+            self.streams.removeListener(self)
 
     def onQueryIdle(self, event) -> None:  # pragma: no cover
         pass

@@ -187,3 +187,97 @@ def test_signal_metrics_replay_is_noop(spark, tmp_path):
     got = sink.read_table(spark).toPandas()
     assert len(got) == 1 and int(got.iloc[0]["batch_id"]) == 7
     assert int(got.iloc[0]["n_rows"]) == 3
+
+
+def test_second_app_in_one_session_drains_cleanly(spark, tmp_path):
+    """Each app's metrics listener records only that app's queries and is
+    removed once they stop: a second app in the same session drains
+    cleanly after the first app's out_dir is gone, and its metrics file
+    holds its own six queries and nothing else."""
+    import shutil
+    import time
+
+    src = write_transcripts_parquet(str(tmp_path / "src"), n_turns=600, seed=13, n_files=2)
+    jsqm = spark.streams._jsqm
+    n_listeners = len(jsqm.listListeners())
+
+    def drain(out_dir):
+        app = TranscriptsApp(src_dir=src, out_dir=out_dir)
+        queries = app.start(spark, available_now=True)
+        for q in queries:
+            q.awaitTermination()
+        app.release_models()
+        # the terminated events reach listeners asynchronously
+        deadline = time.time() + 60
+        while len(jsqm.listListeners()) > n_listeners and time.time() < deadline:
+            time.sleep(0.2)
+        assert len(jsqm.listListeners()) == n_listeners
+        return app, queries
+
+    first, _ = drain(str(tmp_path / "first"))
+    shutil.rmtree(first.out_dir)
+
+    second, queries = drain(str(tmp_path / "second"))
+    assert all(q.exception() is None for q in queries)
+    assert sum(r["rows"] for r in second.clean_sink.lineage()) > 0
+    assert not os.path.exists(first.out_dir)
+    with open(os.path.join(second.out_dir, "metrics.jsonl")) as f:
+        recs = [json.loads(x) for x in f if x.strip()]
+    ids = {str(q.id) for q in queries}
+    assert {r["id"] for r in recs} == ids
+    for event in ("started", "terminated"):
+        assert {r["id"] for r in recs if r["event"] == event} == ids
+
+
+def test_metrics_listener_removes_itself_once_under_thread_races(tmp_path):
+    """Terminated events arrive on Spark's listener-bus thread while the
+    owner seals the listener: whatever the interleaving, the listener
+    leaves the session exactly once, after its last query stops."""
+    import sys
+    import threading
+    from types import SimpleNamespace
+
+    from dataflow_spark.streaming.metrics import JsonlMetricsListener
+
+    class Streams:
+        def __init__(self):
+            self.added = self.removed = 0
+
+        def addListener(self, listener):
+            self.added += 1
+
+        def removeListener(self, listener):
+            self.removed += 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for rnd in range(200):
+            streams = Streams()
+            listener = JsonlMetricsListener(str(tmp_path / f"m{rnd}.jsonl"), streams)
+            events = [SimpleNamespace(id=f"q{i}", name=f"n{i}", exception=None) for i in range(16)]
+            for ev in events:
+                listener.expecting = ev.name
+                listener.onQueryStarted(ev)
+            # a query the owner did not start is ignored
+            listener.expecting = None
+            listener.onQueryStarted(SimpleNamespace(id="other", name="n0"))
+            threads = [
+                threading.Thread(target=listener.onQueryTerminated, args=(ev,))
+                for ev in events
+            ]
+            threads.insert(rnd % len(threads), threading.Thread(target=listener.seal))
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=10)
+            assert not any(t.is_alive() for t in threads)
+            assert (streams.added, streams.removed) == (1, 1)
+            with open(listener.path) as f:
+                recs = [json.loads(x) for x in f]
+            assert sorted(r["id"] for r in recs if r["event"] == "terminated") == sorted(
+                ev.id for ev in events
+            )
+            assert "other" not in {r["id"] for r in recs}
+    finally:
+        sys.setswitchinterval(interval)
