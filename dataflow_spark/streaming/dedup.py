@@ -90,6 +90,7 @@ from dataflow_spark.streaming.bloom import (
     save_bloom,
     sidecar_bytes,
 )
+from dataflow_spark.streaming.sink import append_commit, read_commit_log
 
 
 # over-cap probe chunk width: 16 mask words → up to 1008 unit filters
@@ -196,13 +197,9 @@ class StreamingFirstWinsDedup:
         # replacement, or same-length modification still invalidates it
         fp = self._commits_fingerprint()
         if self._committed_cache is None or fp != self._commits_stat:
-            if fp is None:
-                self._committed_cache = set()
-            else:
-                with open(self._commits) as f:
-                    self._committed_cache = {
-                        json.loads(x)["batch_id"] for x in f if x.strip()
-                    }
+            self._committed_cache = {
+                r["batch_id"] for r in read_commit_log(self._commits)
+            }
             self._commits_stat = fp
         return self._committed_cache
 
@@ -654,8 +651,7 @@ class StreamingFirstWinsDedup:
         if self.downstream is not None:
             self.downstream(survivors, batch_id)
         _mark("downstream")
-        with open(self._commits, "a") as f:
-            f.write(json.dumps({"batch_id": batch_id, "rows": n_surv}) + "\n")
+        append_commit(self._commits, {"batch_id": batch_id, "rows": n_surv})
         self._committed().add(batch_id)
         self._commits_stat = self._commits_fingerprint()
 

@@ -3,34 +3,99 @@
 Production target is Iceberg ``MERGE INTO ... ON t.conv_id = s.conv_id AND
 t.turn_idx = s.turn_idx`` inside ``foreachBatch`` (the reference's
 FileStorage.write step files, storage.py:212-277, generalized to an ACID
-table). No Iceberg runtime jar ships in this container, so the same
-contract is implemented on plain parquet:
+table). ``merge_sink_for`` returns that path when the session has an
+Iceberg runtime; there the executors write the data files, which is what a
+cluster needs. Without a runtime the same contract is implemented on plain
+parquet by :class:`KeyedMergeSink`:
 
-* data layout: ``<dir>/data/batch=<id>/`` written via a temp dir + atomic
-  rename; a batch directory is visible only when complete;
-* commit log: ``<dir>/_commits.jsonl`` appended AFTER the data rename —
-  a replayed micro-batch (same batchId after restart) is detected and its
-  rewrite is harmless (same deterministic content), the commit append is
-  skipped → exactly-once table state;
-* lineage: every commit records batchId, row count, per-spark-partition
-  row counts, and wall time — the per-partition lineage the north rule
-  asks for;
+* data layout: ``<dir>/data/batch=<id>/part-<n>.parquet``, each row
+  carrying ``__batch_id`` and ``__part_id`` (its Spark partition). The
+  files are written into ``batch=<id>.tmp/`` and the directory is renamed
+  into place, so a batch directory is complete when it is visible;
+* commit log: ``<dir>/_commits.jsonl``, one JSON line per batch appended
+  AFTER the rename. A replayed micro-batch (same batchId after a restart)
+  finds its line and is a no-op; a crash between the rename and the append
+  leaves the batch uncommitted, and its replay replaces the directory. A
+  line torn by a crash mid-append is ignored and cut off before the next
+  append;
+* lineage: the commit line is the lineage record — batchId, row count,
+  per-Spark-partition row counts (``partition_rows``), wall time and a
+  timestamp — so only committed batches have lineage, once each;
 * read side: ``read_table`` resolves the key (conv_id, turn_idx) by
-  last-writer-wins (max batchId) — MERGE semantics.
+  last-writer-wins (max batchId) over committed batches — MERGE semantics.
 
-``iceberg_merge_sink`` is the real-catalog path, exercised only when an
-Iceberg catalog is configured on the session.
+Write path and its memory bound: each micro-batch is collected to the
+driver once with ``toArrow()`` (one Spark job, the batch's own plan) and
+written by pyarrow, split into up to one file per core. Spark's file
+writer cost more than the rows on small batches: each file or directory it
+creates forks a ``chmod`` on a host without native Hadoop, and every write
+task deserializes the job's Hadoop configuration. The trade is that a
+batch passes through driver memory; ``spark.driver.maxResultSize`` fails
+an oversized batch with an error rather than an out-of-memory crash. Size
+micro-batches with the trigger (``maxFilesPerTrigger``), or use the Iceberg
+path, for batches the driver should not hold.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Below about 1 MiB per file a second file costs more than its thread saves.
+_FILE_BYTES = 1 << 20
+
+
+def read_commit_log(path: str) -> list[dict]:
+    """Records of a JSON-lines commit log, oldest first. An unterminated
+    last line is the tail of an append that a crash cut short; it is not a
+    commit and is ignored."""
+    try:
+        with open(path, "rb") as f:
+            data = f.read()
+    except FileNotFoundError:
+        return []
+    complete = data[: data.rfind(b"\n") + 1]
+    return [json.loads(line) for line in complete.splitlines() if line.strip()]
+
+
+def append_commit(path: str, record: dict) -> None:
+    """Append one record to a commit log, first cutting off a torn last
+    line (see :func:`read_commit_log`) so the new record starts a line."""
+    with open(path, "a+b") as f:
+        size = f.seek(0, os.SEEK_END)
+        if size:
+            f.seek(size - 1)
+            if f.read(1) != b"\n":
+                f.seek(0)
+                f.truncate(f.read().rfind(b"\n") + 1)
+        f.write((json.dumps(record) + "\n").encode())
+
+
+def _write_parquet_dir(table: pa.Table, out_dir: str) -> None:
+    """Write ``table`` as parquet files in a new ``out_dir``, one file per
+    ~1 MiB up to one per core, written on parallel threads (pyarrow's
+    writer releases the GIL). A zero-row table still gets one file, which
+    carries the schema."""
+    os.makedirs(out_dir)
+    files = max(1, min(pa.cpu_count(), table.nbytes // _FILE_BYTES))
+    step = max(1, -(-table.num_rows // files))
+    parts = [table.slice(i, step) for i in range(0, table.num_rows, step)] or [table]
+
+    def write(i: int) -> None:
+        pq.write_table(parts[i], os.path.join(out_dir, f"part-{i:05d}.parquet"))
+
+    with ThreadPoolExecutor(len(parts)) as pool:
+        list(pool.map(write, range(len(parts))))
 
 
 @dataclass
@@ -42,70 +107,39 @@ class KeyedMergeSink:
     def _commits_path(self) -> str:
         return os.path.join(self.table_dir, "_commits.jsonl")
 
-    @property
-    def _lineage_path(self) -> str:
-        return os.path.join(self.table_dir, "_lineage.jsonl")
-
     def committed_batches(self) -> set[int]:
-        if not os.path.exists(self._commits_path):
-            return set()
-        with open(self._commits_path) as f:
-            return {json.loads(line)["batch_id"] for line in f if line.strip()}
-
-    @staticmethod
-    def _footer_partition_counts(parquet_dir: str) -> dict[str, int]:
-        """partition-id → row count from part-file footers (metadata-only;
-        'part-00007-...' file index == spark partition id)."""
-        import pyarrow.parquet as pq
-
-        counts: dict[str, int] = {}
-        for name in os.listdir(parquet_dir):
-            if not name.startswith("part-") or not name.endswith(".parquet"):
-                continue
-            pid = str(int(name.split("-")[1]))
-            n = pq.ParquetFile(os.path.join(parquet_dir, name)).metadata.num_rows
-            if n:
-                counts[pid] = counts.get(pid, 0) + n
-        return counts
+        return {r["batch_id"] for r in read_commit_log(self._commits_path)}
 
     def foreach_batch(self, df: DataFrame, batch_id: int) -> None:
         if batch_id in self.committed_batches():
             # replay after restart — already durable, exactly-once no-op
             return
-        os.makedirs(os.path.join(self.table_dir, "data"), exist_ok=True)
+        t0 = time.time()
+        table = (
+            df.withColumn("__batch_id", F.lit(batch_id))
+            .withColumn("__part_id", F.spark_partition_id())
+            .toArrow()
+        )
         final = os.path.join(self.table_dir, "data", f"batch={batch_id}")
         tmp = final + ".tmp"
-        t0 = time.time()
-        out = df.withColumn("__batch_id", F.lit(batch_id)).withColumn(
-            "__part_id", F.spark_partition_id()
-        )
-        out.write.mode("overwrite").parquet(tmp)
-        # per-partition lineage from the written parquet FOOTERS — pure
-        # metadata, no second scan of the batch (task part-files map 1:1 to
-        # spark partitions; footer carries the row count)
-        part_counts = self._footer_partition_counts(tmp)
-        n_rows = sum(part_counts.values())
+        # a leftover tmp is a write that a crash cut short
+        shutil.rmtree(tmp, ignore_errors=True)
+        _write_parquet_dir(table, tmp)
         if os.path.exists(final):
             # crashed between rename and commit append on a previous run
-            import shutil
-
             shutil.rmtree(final)
         os.rename(tmp, final)
-        with open(self._lineage_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "batch_id": batch_id,
-                        "rows": n_rows,
-                        "partition_rows": part_counts,
-                        "wall_s": round(time.time() - t0, 3),
-                        "ts": time.time(),
-                    }
-                )
-                + "\n"
-            )
-        with open(self._commits_path, "a") as f:
-            f.write(json.dumps({"batch_id": batch_id, "rows": n_rows}) + "\n")
+        counts = pc.value_counts(table["__part_id"]).to_pylist()
+        append_commit(
+            self._commits_path,
+            {
+                "batch_id": batch_id,
+                "rows": table.num_rows,
+                "partition_rows": {str(c["values"]): c["counts"] for c in counts},
+                "wall_s": round(time.time() - t0, 3),
+                "ts": time.time(),
+            },
+        )
 
     def read_table(self, spark: SparkSession, as_of_batch: int | None = None) -> DataFrame:
         """Merged view: last-writer-wins per key over committed batches.
@@ -116,12 +150,12 @@ class KeyedMergeSink:
         committed = self.committed_batches()
         if as_of_batch is not None:
             committed = {b for b in committed if b <= as_of_batch}
-        data_dir = os.path.join(self.table_dir, "data")
-        if not committed or not os.path.exists(data_dir):
+        if not committed:
             raise FileNotFoundError(f"no committed batches in {self.table_dir}")
-        df = spark.read.parquet(os.path.join(data_dir, "batch=*"))
-        df = df.filter(
-            F.col("__batch_id").isin([int(b) for b in committed])
+        # only committed directories: an uncommitted batch=<id>.tmp may
+        # hold a file that a crash cut short
+        df = spark.read.parquet(
+            *[os.path.join(self.table_dir, "data", f"batch={b}") for b in sorted(committed)]
         )
         value_cols = [c for c in df.columns if c not in ("__part_id",)]
         winners = df.groupBy(*[F.col(k) for k in self.keys]).agg(
@@ -132,10 +166,9 @@ class KeyedMergeSink:
         return winners.select("row.*").drop("__batch_id", "__part_id")
 
     def lineage(self) -> list[dict]:
-        if not os.path.exists(self._lineage_path):
-            return []
-        with open(self._lineage_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+        """One record per committed batch: ``batch_id``, ``rows``,
+        ``partition_rows`` (Spark partition id → rows), ``wall_s``, ``ts``."""
+        return read_commit_log(self._commits_path)
 
 
 def merge_sink_for(

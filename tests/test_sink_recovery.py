@@ -2,12 +2,15 @@
 merged table equals batch truth with unique keys, replays are no-ops, and
 per-partition lineage is recorded."""
 
+import datetime as dt
+import json
 import os
 import time
 
 import pytest
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from dataflow_spark.datagen import make_transcripts
 from dataflow_spark.functions.refiners import apply_refiners
@@ -104,6 +107,108 @@ def test_merge_upserts_by_key(spark, tmp_path):
     sink.foreach_batch(df2, 1)
     out = {(r.conv_id, r.turn_idx): r.text for r in sink.read_table(spark).collect()}
     assert out == {("c1", 0): "v2", ("c1", 1): "w"}  # last writer wins
+
+
+def _turns(spark, n, seed, parts=1):
+    return spark.createDataFrame(make_transcripts(n, seed=seed)).repartition(parts)
+
+
+def test_replay_after_crash_before_commit_counts_lineage_once(spark, tmp_path):
+    sink = KeyedMergeSink(str(tmp_path / "t"))
+    df = _turns(spark, 200, seed=3)
+    sink.foreach_batch(df, 0)
+    # crash after the data rename, before the commit append
+    with open(sink._commits_path, "r+") as f:
+        lines = f.readlines()
+        f.seek(0)
+        f.truncate()
+        f.writelines(lines[:-1])
+    assert sink.committed_batches() == set()
+    sink.foreach_batch(df, 0)  # replay
+    lin = sink.lineage()
+    assert [r["batch_id"] for r in lin] == [0]
+    assert sum(r["rows"] for r in lin) == sink.read_table(spark).count() == 200
+
+
+def test_torn_commit_log_tail_is_ignored_and_cut(spark, tmp_path):
+    sink = KeyedMergeSink(str(tmp_path / "t"), keys=("k",))
+    sink.foreach_batch(spark.createDataFrame(pd.DataFrame({"k": [1, 2], "v": ["a", "b"]})), 0)
+    with open(sink._commits_path, "a") as f:
+        f.write('{"batch_id": 1, "ro')  # killed mid-append
+    assert sink.committed_batches() == {0}
+    sink.foreach_batch(spark.createDataFrame(pd.DataFrame({"k": [2, 3], "v": ["B", "c"]})), 1)
+    assert sink.committed_batches() == {0, 1}
+    with open(sink._commits_path) as f:
+        assert [json.loads(line)["batch_id"] for line in f] == [0, 1]
+    got = {r["k"]: r["v"] for r in sink.read_table(spark).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+
+
+def test_committed_batch_dir_holds_only_parquet_data_files(spark, tmp_path):
+    sink = KeyedMergeSink(str(tmp_path / "t"))
+    sink.foreach_batch(_turns(spark, 400, seed=4, parts=4), 0)
+    data = os.path.join(sink.table_dir, "data")
+    assert os.listdir(data) == ["batch=0"]
+    files = os.listdir(os.path.join(data, "batch=0"))
+    assert files
+    assert all(f.startswith("part-") and f.endswith(".parquet") for f in files), files
+
+
+def test_multi_mib_batch_splits_into_files_and_reads_back(spark, tmp_path):
+    import pyarrow as pa
+
+    sink = KeyedMergeSink(str(tmp_path / "t"), keys=("k",))
+    pdf = pd.DataFrame({"k": range(3000), "v": [f"{i:04d}" * 250 for i in range(3000)]})
+    sink.foreach_batch(spark.createDataFrame(pdf), 0)  # ~3 MB of text
+    files = os.listdir(os.path.join(sink.table_dir, "data", "batch=0"))
+    assert (len(files) > 1) == (pa.cpu_count() > 1), files
+    got = sink.read_table(spark).toPandas().sort_values("k").reset_index(drop=True)
+    assert got.equals(pdf)
+
+
+def test_partition_rows_match_spark_partitions(spark, tmp_path):
+    sink = KeyedMergeSink(str(tmp_path / "t"))
+    df = _turns(spark, 1000, seed=5, parts=4)
+    expected = {
+        str(r[0]): r[1] for r in df.groupBy(F.spark_partition_id()).count().collect()
+    }
+    assert len(expected) == 4
+    sink.foreach_batch(df, 0)
+    (rec,) = sink.lineage()
+    assert rec["partition_rows"] == expected
+    assert rec["rows"] == 1000
+
+
+def test_only_batch_empty_reads_zero_rows_with_schema(spark, tmp_path):
+    sink = KeyedMergeSink(str(tmp_path / "t"))
+    empty = _turns(spark, 50, seed=6).limit(0)
+    sink.foreach_batch(empty, 0)
+    assert sink.lineage()[0]["rows"] == 0
+    out = sink.read_table(spark)
+    assert out.count() == 0
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in empty.schema
+    ]
+
+
+def test_batch_from_spark_writer_merges_with_arrow_batch(spark, tmp_path):
+    """Upgrade path: a table whose batch 0 was written by Spark's
+    DataFrameWriter (the earlier layout, commit line without lineage)
+    keeps merging when batch 1 is written by the Arrow path."""
+    schema = "conv_id string, turn_idx int, text string, ts timestamp"
+    t = [dt.datetime(2024, 1, 1, 0, 0, s, 123456) for s in range(4)]
+    sink = KeyedMergeSink(str(tmp_path / "t"))
+    old = spark.createDataFrame([("c1", 0, "a", t[0]), ("c1", 1, "b", t[1])], schema)
+    old.withColumn("__batch_id", F.lit(0)).withColumn(
+        "__part_id", F.spark_partition_id()
+    ).write.parquet(os.path.join(sink.table_dir, "data", "batch=0"))
+    with open(sink._commits_path, "w") as f:
+        f.write(json.dumps({"batch_id": 0, "rows": 2}) + "\n")
+    new = spark.createDataFrame([("c1", 1, "B", t[2]), ("c2", 0, "c", t[3])], schema)
+    sink.foreach_batch(new, 1)
+    got = sorted(tuple(r) for r in sink.read_table(spark).collect())
+    assert got == [("c1", 0, "a", t[0]), ("c1", 1, "B", t[2]), ("c2", 0, "c", t[3])]
+    assert sink.committed_batches() == {0, 1}
 
 
 def test_merge_sink_factory_falls_back_without_iceberg(spark, tmp_path):

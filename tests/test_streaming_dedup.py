@@ -118,6 +118,13 @@ def test_crash_between_state_write_and_commit_loses_nothing(spark, tmp_path):
     assert sorted(out) == survivors_first  # zero loss, identical keep-set
 
 
+def test_torn_commit_log_tail_is_not_a_commit(tmp_path):
+    d = StreamingFirstWinsDedup(str(tmp_path / "state_torn"), order_col="rid")
+    with open(d._commits, "w") as f:
+        f.write('{"batch_id": 0, "rows": 3}\n{"batch_id": 1, "ro')  # killed mid-append
+    assert d._committed() == {0}
+
+
 def test_compaction_keepset_unchanged(spark, tmp_path):
     pdf = make_transcripts(900, seed=32).reset_index(drop=True)
     pdf["rid"] = np.arange(len(pdf), dtype="int64")
