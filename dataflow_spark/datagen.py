@@ -197,7 +197,9 @@ def write_transcripts_parquet(
     and floored at ``spark.sql.files.openCostInBytes`` (4 MB default).
     The marker records the layout; a cache written
     by an older layout is regenerated in place (same data — seed-derived
-    — different physical chunking)."""
+    — different physical chunking), and its data files are deleted first
+    so a relayout to fewer files leaves no stale shard behind."""
+    import glob
     import os
 
     layout = f"n_turns={n_turns} seed={seed} n_files={n_files} rg={_ROW_GROUP_SIZE}"
@@ -208,6 +210,8 @@ def write_transcripts_parquet(
                 return path
         # stale layout: rewrite the data files under the current chunking
         os.remove(marker)
+    for old in glob.glob(os.path.join(path, "transcripts*.parquet")):
+        os.remove(old)
     os.makedirs(path, exist_ok=True)
     pdf = make_transcripts(n_turns=n_turns, seed=seed, **kw)
     # Spark cannot read TIMESTAMP(NANOS) parquet — store microseconds.

@@ -399,21 +399,6 @@ def bpe_token_count_udf(merges: list[tuple[str, str]]) -> Column:
     return F.pandas_udf(count_series, "int")
 
 
-def bpe_token_count_auto(
-    text_col: str | Column,
-    merges: list[tuple[str, str]],
-    max_codegen_merges: int = 64,
-) -> Column:
-    """Dispatch: nested-``replace`` whole-stage codegen (zero Python, SQL-
-    oracle-able) up to ``max_codegen_merges``; the Arrow-batched closure
-    encoder above it. Both paths are pytest-pinned equal — including on
-    the cross-boundary replace artifacts."""
-    if len(merges) <= max_codegen_merges:
-        return bpe_token_count(text_col, merges)
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return bpe_token_count_udf(merges)(c)
-
-
 def estimated_token_count(text_col: str | Column) -> Column:
     """The pre-r5 fallback estimator (``ceil(chars/4)``) — kept for
     pipelines that run before a tokenizer has been trained."""

@@ -141,90 +141,6 @@ _RESOLVE_SCHEMA = T.StructType(
 )
 
 
-def _greedy_resolve(nodes: pd.DataFrame, edges: pd.DataFrame) -> pd.DataFrame:
-    """Greedy MIS in ascending id order — the reference's first-wins scan
-    restricted to one collision component."""
-    ids = np.sort(nodes["id"].unique())
-    adj: dict[int, set[int]] = {}
-    for s, d in zip(edges["src"].values, edges["dst"].values):
-        adj.setdefault(int(s), set()).add(int(d))
-        adj.setdefault(int(d), set()).add(int(s))
-    kept: set[int] = set()
-    out = []
-    for i in ids:
-        i = int(i)
-        ok = not (adj.get(i, set()) & kept)
-        if ok:
-            kept.add(i)
-        out.append((i, ok))
-    return pd.DataFrame(out, columns=["id", "keep"])
-
-
-def first_wins_keep_ids(nodes_with_edges: DataFrame, edges: DataFrame) -> DataFrame:
-    """Resolve first-wins over candidate ``edges(src,dst)`` (long ids, where
-    the id IS the global order key rank). Returns DataFrame[id, keep] for
-    every node that appears in an edge."""
-    comp = connected_components(edges)
-    n = nodes_with_edges.join(comp, "id").select("comp", "id")
-    e = (
-        edges.join(comp.withColumnRenamed("id", "src").withColumnRenamed("comp", "c1"), "src")
-        .select("c1", "src", "dst")
-        .withColumnRenamed("c1", "comp")
-    )
-    return (
-        n.groupBy("comp")
-        .cogroup(e.groupBy("comp"))
-        .applyInPandas(
-            lambda left, right: _greedy_resolve(left, right), schema=_RESOLVE_SCHEMA
-        )
-    )
-
-
-def apply_first_wins(
-    df: DataFrame, id_col: str, edges: DataFrame, small_graph_threshold: int = 200_000
-) -> DataFrame:
-    """Filter ``df`` to first-wins survivors given candidate edges over
-    ``id_col`` (long order-rank ids). Rows without any edge are kept.
-
-    The edge set is materialized once (it is consumed by the component
-    loop AND the resolve join). Greedy MIS in id order over the whole
-    graph equals per-component greedy, so when the collision graph is
-    small (the overwhelmingly common case — duplicates are a few % of the
-    corpus) the component loop is skipped and one task resolves the whole
-    graph; the distributed label-propagation path handles the huge-graph
-    case."""
-    edges = edges.localCheckpoint()
-    n_edges = edges.count()
-    if n_edges == 0:
-        return df
-    if n_edges <= small_graph_threshold:
-        one = edges.withColumn("__g", F.lit(0))
-        verdict = one.groupBy("__g").applyInPandas(
-            lambda pdf: _greedy_resolve(
-                pd.DataFrame(
-                    {"id": np.concatenate([pdf["src"].values, pdf["dst"].values])}
-                ),
-                pdf,
-            ),
-            schema=_RESOLVE_SCHEMA,
-        )
-    else:
-        nodes = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        verdict = first_wins_keep_ids(nodes, edges)
-    verdict = verdict.select(
-        F.col("id").alias("__fw_id"), F.col("keep").alias("__fw_keep")
-    )
-    return (
-        df.join(verdict, df[id_col] == verdict["__fw_id"], "left")
-        .filter(F.coalesce(F.col("__fw_keep"), F.lit(True)))
-        .drop("__fw_id", "__fw_keep")
-    )
-
-
 def with_order_rank(df: DataFrame, order_cols: list[str], rank_col: str = "__ord") -> DataFrame:
     """Stable dense global order rank (long) over ``order_cols``.
 

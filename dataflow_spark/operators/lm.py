@@ -167,16 +167,19 @@ def bigram_counts(
 LOCAL_SCORE_MAX_BIGRAMS = 200_000
 
 
-def build_local_ppl(bc: DataFrame, v: int, k: int = 1, cap: int | None = None):
-    """Collect the bigram count table when it is driver-sized and
-    pre-fold it into the shuffle-free Arrow scorer (``local_ppl_udf``);
-    return None above the cap (callers keep the join plan). The context
-    table is re-derived from the pairs by exact integer summation, so no
-    second collect is needed."""
-    cap = LOCAL_SCORE_MAX_BIGRAMS if cap is None else cap
-    head = bc.limit(cap + 1).collect()
-    if len(head) > cap:
+def build_local_ppl(bc: DataFrame, v: int | None = None, k: int = 1):
+    """Collect the bigram count table when it is driver-sized (at most
+    ``LOCAL_SCORE_MAX_BIGRAMS`` types) and pre-fold it into the
+    shuffle-free Arrow scorer (``local_ppl_udf``); return None above the
+    cap (callers keep the join plan). The context table is re-derived
+    from the pairs by exact integer summation, so no second collect is
+    needed; likewise ``v=None`` derives V as ``len({w2})`` of the
+    collected rows, the same exact integer ``bigram_counts`` computes."""
+    head = bc.limit(LOCAL_SCORE_MAX_BIGRAMS + 1).collect()
+    if len(head) > LOCAL_SCORE_MAX_BIGRAMS:
         return None
+    if v is None:
+        v = len({r["w2"] for r in head})
     pairs = {(r["w1"], r["w2"]): r["c"] for r in head}
     ctx: dict = {}
     for (w1, _w2), c in pairs.items():
@@ -206,21 +209,13 @@ def bigram_perplexity(
     the ordered fold. No window over the corpus, no driver data beyond
     the vocab-bounded collect."""
     # r8: defer the V distinct-count job — on the local path the whole
-    # type table is collected anyway and V == len({w2}) of the collected
-    # rows, the identical exact integer; the fallback computes it as
-    # before. One distributed job fewer per trained scoring query.
-    bc, cc, v = bigram_counts(df, text_col, persists, compute_v=False)
+    # type table is collected anyway and build_local_ppl derives V from
+    # the collected rows, the identical exact integer; only the fallback
+    # runs the distinct count. One distributed job fewer per trained
+    # scoring query.
+    bc, cc, _ = bigram_counts(df, text_col, persists, compute_v=False)
     if local == "auto":
-        head = bc.limit(LOCAL_SCORE_MAX_BIGRAMS + 1).collect()
-        if len(head) <= LOCAL_SCORE_MAX_BIGRAMS:
-            v = len({r["w2"] for r in head})
-            pairs = {(r["w1"], r["w2"]): r["c"] for r in head}
-            ctx: dict = {}
-            for (w1, _w2), c in pairs.items():
-                ctx[w1] = ctx.get(w1, 0) + c
-            udf = local_ppl_udf(pairs, ctx, v, k=k)
-        else:
-            udf = None
+        udf = build_local_ppl(bc, k=k)
         if udf is not None:
             out = df.select(
                 F.col(id_col), udf(F.col(text_col)).alias("__s")
@@ -232,8 +227,8 @@ def bigram_perplexity(
             if round_to is not None:
                 out = out.withColumn("ppl", F.round("ppl", round_to))
             return out
-    if v is None:  # fallback path: over-cap or local="never"
-        v = bc.select("w2").distinct().count()
+    # fallback path: over-cap or local="never"
+    v = bc.select("w2").distinct().count()
     return bigram_ppl_with_tables(
         df, id_col, bc, cc, v, text_col=text_col, k=k, round_to=round_to
     )

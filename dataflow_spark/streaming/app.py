@@ -180,19 +180,16 @@ class TranscriptsApp:
         os.replace(tmp, meta_path)
         self._maybe_build_local_scorer()
 
-    # Above this many bigram types the model no longer counts as
-    # driver-sized (closure pickle ~15 MB at the cap) and score_df keeps
-    # the broadcast-join plan. The scored artifact is vocab-bounded by
-    # construction, so real corpora sit far below this at any scale the
-    # stage trains on one machine.
-    LOCAL_SCORE_MAX_BIGRAMS = 200_000
-
     def _maybe_build_local_scorer(self):
         """Pre-fold the trained tables into a shuffle-free Arrow scorer
-        (lm.local_ppl_udf) when they are driver-sized; otherwise score_df
-        keeps the explode+join plan. Measured at sf0.1/local[32]: the
-        join plan's score-only stream is ~15.8 s, the local scorer's
-        is benched per-round — see bench stream_scored_transcripts."""
+        (lm.local_ppl_udf) when they are driver-sized (at most
+        ``lm.LOCAL_SCORE_MAX_BIGRAMS`` bigram types); otherwise score_df
+        keeps the broadcast-join plan. The scored artifact is
+        vocab-bounded by construction, so real corpora sit far below the
+        cap at any scale the stage trains on one machine. Measured at
+        sf0.1/local[32]: the join plan's score-only stream is ~15.8 s,
+        the local scorer's is benched per-round — see bench
+        stream_scored_transcripts."""
         from dataflow_spark.operators import lm as LM
 
         # One Arrow-batched BPE counter for the stream's life (the udf
@@ -210,9 +207,7 @@ class TranscriptsApp:
 
         self._bpe_counter = bpe_token_count_udf(self._bpe_table)
         bc, _cc, v = self._lm_tables
-        self._local_scorer = LM.build_local_ppl(
-            bc, v, k=1, cap=self.LOCAL_SCORE_MAX_BIGRAMS
-        )
+        self._local_scorer = LM.build_local_ppl(bc, v, k=1)
 
     def release_models(self):
         """Unpersist the trained LM tables (mirrors the per-batch
@@ -227,19 +222,13 @@ class TranscriptsApp:
         per-micro-batch path and the batch twin, so the streaming output
         can be byte-compared against the one-shot batch query."""
         from dataflow_spark.operators import lm as LM
-        from dataflow_spark.operators.bpe import bpe_token_count_auto
         from pyspark.sql import functions as F
 
         bc, cc, v = self._lm_tables
         lo, hi = self.bpe_token_band
-        # the long-lived Arrow counter when trained; the codegen/auto
-        # path only for a caller that builds score_df without train_models
-        bpe_count = (
-            self._bpe_counter(F.col("text"))
-            if getattr(self, "_bpe_counter", None) is not None
-            else bpe_token_count_auto("text", self._bpe_table)
-        )
-        if getattr(self, "_local_scorer", None) is not None:
+        # train_models sets the long-lived Arrow counter with the tables
+        bpe_count = self._bpe_counter(F.col("text"))
+        if self._local_scorer is not None:
             # shuffle-free path (r7): model pre-folded into the Arrow
             # scorer — the stage is one narrow map end to end (no
             # explode, no join, no __rid key), the plan shape a 100 TB

@@ -21,17 +21,13 @@ emission, so state holds only the open tail of each conversation.
 
 from __future__ import annotations
 
+import math
 from typing import Any, Iterator, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-try:  # Spark 4 stateful-processor API (transformWithStateInPandas)
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-except ImportError:  # pragma: no cover - Spark < 4
-    StatefulProcessor = object  # type: ignore[assignment,misc]
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -55,19 +51,12 @@ STATE_SCHEMA = T.StructType(
 )
 
 
-def _assemble(rows: pd.DataFrame) -> Tuple[int, str]:
-    """Reference assembly: order by turn_idx, drop trailing user turn."""
-    rows = rows.sort_values("turn_idx")
-    if len(rows) and rows.iloc[-1]["role"] == "user":
-        rows = rows.iloc[:-1]
-    lines = [f"{r.role}|{r.text}" for r in rows.itertuples()]
-    return len(rows), "\n".join(lines)
-
-
-def _split_sessions(buf: pd.DataFrame, gap_us: int) -> list[pd.DataFrame]:
-    buf = buf.sort_values(["ts_us", "turn_idx"]).reset_index(drop=True)
-    breaks = (buf["ts_us"].diff() > gap_us).cumsum()
-    return [g for _, g in buf.groupby(breaks)]
+def _turns(pdf: pd.DataFrame) -> list[tuple]:
+    """(ts_us, turn_idx, role, text) tuples of a pandas batch of turns;
+    a null text assembles as the empty string."""
+    ts_us = pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
+    texts = ["" if x is None or x != x else x for x in pdf["text"]]
+    return list(zip(ts_us, pdf["turn_idx"].astype("int64").tolist(), pdf["role"].tolist(), texts))
 
 
 def _assemble_turns(turns: list[tuple]) -> Tuple[int, str]:
@@ -97,13 +86,7 @@ def make_assembler(gap_seconds: int = 600):
 
         if not state.hasTimedOut:
             for p in pdfs:
-                if not len(p):
-                    continue
-                ts_us = p["ts"].astype("datetime64[us]").astype("int64").tolist()
-                texts = ["" if x is None or x != x else x for x in p["text"]]
-                turns.extend(
-                    zip(ts_us, p["turn_idx"].astype("int64").tolist(), p["role"].tolist(), texts)
-                )
+                turns.extend(_turns(p))
 
         wm_us = state.getCurrentWatermarkMs() * 1000
         out_rows, remaining = _flush(turns, gap_us, wm_us, conv_id)
@@ -149,11 +132,12 @@ def assemble_conversations(
 
 
 def _flush(
-    turns: list[tuple], gap_us: int, wm_us: int, conv_id: str
+    turns: list[tuple], gap_us: int, wm_us: float, conv_id: str
 ) -> Tuple[list[dict[str, Any]], list[tuple]]:
     """Shared session-close logic: sort, split on gap, emit sessions whose
-    end + gap is behind the watermark. Returns (emitted rows, open tail).
-    turns are (ts_us, turn_idx, role, text)."""
+    end + gap is behind the watermark (``math.inf`` closes them all).
+    Returns (emitted rows, open tail). turns are (ts_us, turn_idx, role,
+    text)."""
     turns.sort(key=lambda t: (t[0], t[1]))
     sessions: list[list[tuple]] = []
     cur: list[tuple] = []
@@ -188,118 +172,17 @@ def _flush(
     return out_rows, remaining
 
 
-class ConversationAssemblyProcessor(StatefulProcessor):
-    """transformWithState(InPandas) twin of ``make_assembler`` — identical
-    pinned semantics, newer state machinery (RocksDB column families, timer
-    API) introduced in Spark 4. Requires
-    ``spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider``.
-    """
-
-    def __init__(self, gap_seconds: int = 600):
-        self.gap_us = gap_seconds * 1_000_000
-
-    def init(self, handle) -> None:
-        self.handle = handle
-        self.turns_state = handle.getListState(
-            "turns", "ts_us long, turn_idx integer, role string, text string"
-        )
-
-    def _emit(self, conv_id: str, turns: list[tuple], wm_us: int):
-        out_rows, remaining = _flush(turns, self.gap_us, wm_us, conv_id)
-        if remaining:
-            self.turns_state.put([tuple(t) for t in remaining])
-            next_close_ms = (remaining[0][0] + self.gap_us) // 1000
-            self.handle.registerTimer(max(next_close_ms, wm_us // 1000 + 1))
-        else:
-            self.turns_state.clear()
-        if out_rows:
-            yield pd.DataFrame(out_rows)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        turns: list[tuple] = [tuple(r) for r in self.turns_state.get()]
-        for p in rows:
-            if not len(p):
-                continue
-            ts_us = p["ts"].astype("datetime64[us]").astype("int64").tolist()
-            texts = ["" if x is None or x != x else x for x in p["text"]]
-            turns.extend(
-                zip(ts_us, p["turn_idx"].astype("int64").tolist(), p["role"].tolist(), texts)
-            )
-        # one live timer per group: drop stale ones before re-registering
-        for t in self.handle.listTimers():
-            self.handle.deleteTimer(t)
-        yield from self._emit(conv_id, turns, timerValues.getCurrentWatermarkInMs() * 1000)
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[pd.DataFrame]:
-        (conv_id,) = key
-        turns = [tuple(r) for r in self.turns_state.get()]
-        yield from self._emit(conv_id, turns, timerValues.getCurrentWatermarkInMs() * 1000)
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def assemble_conversations_tws(
-    stream: DataFrame,
-    gap_seconds: int = 600,
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Streaming conversation assembly via ``transformWithStateInPandas``
-    (Spark 4 stateful-processor API). Same output contract as
-    ``assemble_conversations``; needs the RocksDB state store provider AND
-    ``google.protobuf`` in the Python env (the TWS driver worker's state
-    protocol is protobuf-based — absent in this container, so the twin is
-    byte-parity-tested only where that dependency exists;
-    tests/test_streaming.py gates on importorskip)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=ConversationAssemblyProcessor(gap_seconds),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-    )
-
-
 def assemble_conversations_batch(df: DataFrame, gap_seconds: int = 600) -> DataFrame:
-    """Batch twin of the streaming assembly (same pinned semantics) — used
-    for oracle comparison and for backfills."""
+    """Batch twin of the streaming assembly — used for oracle comparison
+    and for backfills. The stream's session close under an unbounded
+    watermark: with the whole input present, every session is closed."""
     import pyspark.sql.functions as F
 
     gap_us = gap_seconds * 1_000_000
 
     def per_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        buf = pd.DataFrame(
-            {
-                "turn_idx": pdf["turn_idx"].astype("int64"),
-                "role": pdf["role"],
-                "text": pdf["text"].fillna(""),
-                "ts_us": pdf["ts"].astype("datetime64[us]").astype("int64"),
-            }
-        )
-        rows = []
-        for sess in _split_sessions(buf, gap_us):
-            n, transcript = _assemble(sess)
-            if n > 0:
-                rows.append(
-                    {
-                        "conv_id": conv_id,
-                        "session_start": pd.Timestamp(int(sess["ts_us"].min()), unit="us"),
-                        "session_end": pd.Timestamp(int(sess["ts_us"].max()), unit="us"),
-                        "n_turns": n,
-                        "transcript": transcript,
-                    }
-                )
-        return pd.DataFrame(
-            rows, columns=["conv_id", "session_start", "session_end", "n_turns", "transcript"]
-        )
+        rows, _ = _flush(_turns(pdf), gap_us, math.inf, pdf["conv_id"].iloc[0])
+        return pd.DataFrame(rows, columns=OUTPUT_SCHEMA.fieldNames())
 
     return df.select(
         "conv_id", "turn_idx", "role", "text", F.col("ts").cast("timestamp").alias("ts")

@@ -214,47 +214,18 @@ def bloom_filter_udf(bcs):
     return might
 
 
-def bloom_mask_udf(bcs):
-    """pandas_udf(__h1, __h2) → int64 bitmask: bit *i* set iff the *i*-th
-    filter (counting across the given broadcasts in order, each of which
-    holds a LIST of ``(raw_bytes, m)`` filters) might contain the key.
-    At most 63 filters total (bit 63 would be the int64 sign bit).
-
-    This is the building block of the DISTRIBUTED unit probe: an
-    aggregation of ``bit_or(mask)`` over a batch's band hashes tells the
-    driver *which state units* have a possible hit without a single band
-    hash ever leaving the executors — the driver's role shrinks to unit
-    selection (r5 VERDICT ask #2)."""
-    n = sum(len(bc.value) for bc in bcs)
-    if n > 63:
-        raise ValueError(f"bloom_mask_udf: {n} filters > 63-bit mask")
-
-    @F.pandas_udf("long")
-    def mask(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        u1 = _as_u64(h1.to_numpy(dtype=np.int64))
-        u2 = _as_u64(h2.to_numpy(dtype=np.int64))
-        out = np.zeros(len(u1), dtype=np.int64)
-        i = 0
-        for bc in bcs:
-            for raw, m in bc.value:
-                hit = might_contain_vec(
-                    np.frombuffer(raw, dtype=np.uint64), m, u1, u2
-                )
-                out |= hit.astype(np.int64) << i
-                i += 1
-        return pd.Series(out)
-
-    return mask
-
-
 def bloom_multimask_udf(bcs):
-    """``array<long>`` variant of ``bloom_mask_udf`` for probing MORE
-    than 63 filters in one pass: filter *j* (counting across the given
-    broadcasts in order) sets bit ``j % 63`` of word ``j // 63``. The
-    over-cap unit probe aggregates ``bit_or`` per word over ONE scan of
-    the batch, so probe cost no longer grows with the number of state
-    sidecars (r6 VERDICT ask #5 — the old 63-unit chunks re-scanned the
-    persisted batch once per chunk)."""
+    """pandas_udf(__h1, __h2) → ``array<long>`` bitmask: filter *j*
+    (counting across the given broadcasts in order, each of which holds
+    a LIST of ``(raw_bytes, m)`` filters) sets bit ``j % 63`` of word
+    ``j // 63`` iff it might contain the key (bit 63 would be the int64
+    sign bit).
+
+    This is the DISTRIBUTED unit probe: an aggregation of ``bit_or`` per
+    word over ONE scan of a batch's band hashes tells the driver *which
+    state units* have a possible hit without a single band hash leaving
+    the executors, and probe cost does not grow with the number of state
+    sidecars."""
     n = sum(len(bc.value) for bc in bcs)
     words = max((n + 62) // 63, 1)
 
@@ -274,13 +245,6 @@ def bloom_multimask_udf(bcs):
         return pd.Series(list(out.T))
 
     return mask
-
-
-def any_bloom_filter_udf(spark: SparkSession, blooms):
-    """One-shot convenience: broadcast + udf (caller leaks the broadcast —
-    long-running streams should use ``make_bloom_broadcast`` +
-    ``bloom_filter_udf`` and manage the lifecycle)."""
-    return bloom_filter_udf([make_bloom_broadcast(spark, blooms)])
 
 
 def sidecar_bytes(unit_dir: str):

@@ -41,8 +41,10 @@ Mostly-new data ⇒ candidates ≈ real duplicates + ~0.07% false positives
 ⇒ per-batch state bytes read stay ~flat while the keep-set grows without
 bound. Blooms have no false negatives, and an exact anti-join over the
 units actually read makes the final call — pruning can never change the
-keep-set. ``last_state_read`` records units/bytes read per batch (the
-quantity the scale test asserts flat).
+keep-set. A unit whose sidecar is missing or unreadable is read as a
+possible hit, so a lost sidecar costs bytes read, never exactness.
+``last_state_read`` records units/bytes read per batch (the quantity the
+scale test asserts flat).
 
 Bounded filter METADATA as well (not just bounded reads): below
 ``prefilter_broadcast_max_bytes`` of total sidecars, the batch-side
@@ -231,31 +233,16 @@ class StreamingFirstWinsDedup:
             return bands.join(ts, "id")
         return bands.withColumn("ts_us", F.lit(None).cast("long"))
 
-    def _state_dirs(self) -> list[str]:
-        committed = self._committed()
-        comp = self._compaction()
-        dirs = []
-        if comp["dir"] is not None:
-            dirs.append(os.path.join(self.state_dir, "bands", comp["dir"]))
-        dirs.extend(self._batch_dir(b) for b in sorted(committed) if b > comp["upto"])
-        return [d for d in dirs if os.path.exists(d)]
-
     def _state_units(self) -> list[str]:
         """Prunable read units: each ``__bkt=N`` bucket dir of the current
-        compaction (or the compaction root itself for legacy unbucketed
-        state) plus every committed uncompacted per-batch dir."""
+        compaction (none once retention drained it to empty) plus every
+        committed uncompacted per-batch dir."""
         committed = self._committed()
         comp = self._compaction()
         units: list[str] = []
         if comp["dir"] is not None:
             root = os.path.join(self.state_dir, "bands", comp["dir"])
-            if os.path.exists(root):
-                subs = sorted(_glob.glob(os.path.join(root, "__bkt=*")))
-                if subs:
-                    units.extend(subs)
-                elif _glob.glob(os.path.join(root, "*.parquet")):
-                    units.append(root)  # legacy unbucketed compaction
-                # else: retention drained the state to empty — no unit
+            units.extend(sorted(_glob.glob(os.path.join(root, "__bkt=*"))))
         units.extend(self._batch_dir(b) for b in sorted(committed) if b > comp["upto"])
         return [u for u in units if os.path.exists(u)]
 
@@ -269,8 +256,7 @@ class StreamingFirstWinsDedup:
 
     @staticmethod
     def _unit_bucket(unit_dir: str) -> int | None:
-        """Compaction bucket id of a state unit, or None (per-batch dir /
-        legacy unbucketed compaction)."""
+        """Compaction bucket id of a state unit, or None (per-batch dir)."""
         base = os.path.basename(unit_dir)
         if base.startswith("__bkt="):
             return int(base.split("=", 1)[1])
@@ -295,7 +281,7 @@ class StreamingFirstWinsDedup:
         previous batch's new filter; nothing accretes across the stream's
         life (the r4 leak: a fresh union broadcast per batch, never
         unpersisted). Returns (None, loaded) when a sidecar turns out
-        unreadable (caller falls back to the exact full read)."""
+        unreadable (caller falls back to the sharded probe)."""
         current = set(units)
         for path in [p for p in self._unit_bcs if p not in current]:
             self._destroy_unit_bc(path)
@@ -325,9 +311,11 @@ class StreamingFirstWinsDedup:
           the executors shrinks the batch to candidates before anything is
           collected. The broadcast is per-GENERATION (see
           ``_generation_udf``), not per-batch.
-        * ``driver`` (state past ``prefilter_broadcast_max_bytes``) — no
-          standing broadcast at all: per-generation filters are dropped
-          and the whole batch band table becomes the probe source.
+        * ``driver`` (state past ``prefilter_broadcast_max_bytes``, or a
+          unit with a missing or unreadable sidecar) — no standing
+          broadcast at all: per-generation filters are dropped and the
+          whole batch band table becomes the probe source; a sidecar-less
+          unit is read as a hit.
 
         In BOTH modes the per-unit hit/skip decision then runs on the
         executors (``_probe_units``): the driver's role is unit
@@ -351,44 +339,19 @@ class StreamingFirstWinsDedup:
         if not units:
             self.last_state_read = read
             return None
-        sizes = {u: sidecar_bytes(u) for u in units}
-
-        def full_read():
-            # legacy/sidecar-less state: no pruning possible — exact full read
-            state = self._read_units(spark, units)
-            read.update(
-                units_read=len(units),
-                bytes_read=sum(dir_parquet_bytes(u) for u in units),
-                candidates=-1, prefilter_mode="full",
-            )
-            self.last_state_read = read
-            return (
-                bands.join(state.select("band").distinct().hint("shuffle_hash"), "band")
-                .select("id")
-                .distinct()
-            )
-
-        if any(v is None for v in sizes.values()):
-            return full_read()
-
-        # __hx is the RAW bucket hash — the bucket index is taken mod the
-        # bucket count the compaction manifest RECORDS (the count the
-        # __bkt= dirs were written with), driver-side. Using
-        # self.n_buckets here would silently mis-skip units after a
-        # restart with a different n_buckets than the on-disk compaction.
-        comp_nb = self._compaction().get("n_buckets")
+        sizes = [sidecar_bytes(u) for u in units]
         bands_h = bands.select(
             "id",
             "band",
             *band_hash_cols("band"),
             F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
         )
-        if sum(sizes.values()) <= self.prefilter_broadcast_max_bytes:
+        might = None
+        if None not in sizes and sum(sizes) <= self.prefilter_broadcast_max_bytes:
+            might, read["sidecar_bytes_loaded"] = self._generation_udf(spark, units)
+        if might is not None:
             # 1a. broadcast prefilter: mostly-new data shrinks to real dups
             #     + ~0.07% false positives before anything else runs
-            might, loaded = self._generation_udf(spark, units)
-            if might is None:
-                return full_read()
             probe_src = bands_h.filter(
                 might(F.col("__h1"), F.col("__h2"))
             ).persist()
@@ -397,7 +360,6 @@ class StreamingFirstWinsDedup:
             read.update(
                 prefilter_mode="broadcast",
                 prefilter_broadcast_bytes=self._gen_bytes,
-                sidecar_bytes_loaded=loaded,
             )
         else:
             # 1b. sharded distributed probe: no standing broadcast; the
@@ -410,25 +372,24 @@ class StreamingFirstWinsDedup:
 
         # 2. shard skip: the ONLY per-batch collect is the set of distinct
         #    bucket ids — ≤ the manifest's bucket count rows, independent
-        #    of batch and state size. comp_nb None = legacy manifest
-        #    without a recorded count → skip disabled (every unit probed).
-        if comp_nb:
+        #    of batch and state size. __hx is the RAW bucket hash; the
+        #    bucket index is taken mod the count the compaction manifest
+        #    RECORDS (the count the __bkt= dirs were written with), not
+        #    self.n_buckets, which may differ after a restart.
+        cand_units = units
+        if any(self._unit_bucket(u) is not None for u in units):
+            n_buckets = self._compaction()["n_buckets"]
             batch_buckets = {
                 r[0]
                 for r in probe_src.select(
-                    F.pmod(F.col("__hx"), F.lit(comp_nb)).alias("b")
+                    F.pmod(F.col("__hx"), F.lit(n_buckets)).alias("b")
                 )
                 .distinct()
                 .collect()
             }
-        else:
-            batch_buckets = None
-        cand_units = []
-        for u in units:
-            bkt = self._unit_bucket(u)
-            if bkt is not None and batch_buckets is not None and bkt not in batch_buckets:
-                continue  # no batch band hashes into this compaction bucket
-            cand_units.append(u)
+            cand_units = [
+                u for u in units if self._unit_bucket(u) in batch_buckets | {None}
+            ]
 
         # 3. distributed Bloom-bitmask probe → units to read
         hit_units, candidates = self._probe_units(

@@ -7,10 +7,11 @@ as a watermarked stream-stream inner join: a response joins a user turn in
 the same conversation if it arrives within ``max_response`` event time.
 Both sides carry watermarks so Spark can evict join state.
 
-Streaming emits ALL (user, response) pairs inside the bound — picking the
-first response per user turn is a per-key reduction the sink performs
-(exactly-once MERGE keyed (conv_id, user_turn_idx) keeps min response);
-``pair_first_response_batch`` is the batch twin used as oracle.
+Streaming emits ALL (user, response) pairs inside the bound; the app's
+exactly-once MERGE sink keys them by (conv_id, user_turn_idx,
+resp_turn_idx), so a replayed batch merges instead of duplicating.
+``join_user_responses_batch`` is the batch twin with the identical
+predicate, the oracle for the stream's pairs.
 """
 
 from __future__ import annotations
@@ -61,73 +62,6 @@ def join_user_responses(
         "resp_ts",
         (F.unix_micros(F.col("resp_ts").cast("timestamp"))
          - F.unix_micros(F.col("user_ts").cast("timestamp"))).alias("latency_us"),
-    )
-
-
-def pair_first_response_batch(
-    df: DataFrame, max_response_seconds: int = 300, exact: bool = False
-) -> DataFrame:
-    """Batch twin: the FIRST qualifying response per user turn.
-
-    Default plan is a single per-conv window pass over an EVENT-TIME RANGE
-    frame ``(user_ts, user_ts + bound]``: the frame itself enforces both
-    the strict ``resp_ts > user_ts`` predicate (equal-timestamp responses
-    are excluded, exactly like the all-pairs join) and the latency bound,
-    and ``min(struct(turn_idx, ...))`` picks the earliest response inside
-    it. Cost is O(turns x responses-within-bound) per conversation — the
-    frame is bounded by the latency window, never the conversation tail
-    (the all-pairs equi-join squares on a 100k-turn conversation; so does
-    an unboundedFollowing row frame, which Spark re-aggregates per row).
-    Equivalent to ``exact=True`` whenever event time is non-decreasing in
-    ``turn_idx`` within a conversation (true of real transcripts — out-of-
-    order rows could only differ in the ``resp_turn_idx > user_turn_idx``
-    predicate, which the range frame cannot see). Pass ``exact=True`` for
-    the all-pairs join that makes no ordering assumption."""
-    from pyspark.sql import Window
-
-    if exact:
-        pairs = join_user_responses_batch(df, max_response_seconds)
-        return pairs.groupBy("conv_id", "user_turn_idx").agg(
-            F.min_by(
-                F.struct("resp_turn_idx", "resp_role", "resp_ts", "latency_us"),
-                F.col("resp_turn_idx"),
-            ).alias("m"),
-            F.min("user_ts").alias("user_ts"),
-        ).select(
-            "conv_id", "user_turn_idx", "user_ts",
-            F.col("m.resp_turn_idx").alias("resp_turn_idx"),
-            F.col("m.resp_role").alias("resp_role"),
-            F.col("m.resp_ts").alias("resp_ts"),
-            F.col("m.latency_us").alias("latency_us"),
-        )
-
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = (
-        Window.partitionBy("conv_id")
-        .orderBy(ts_us)
-        .rangeBetween(1, max_response_seconds * 1_000_000)
-    )
-    nxt = F.min(
-        F.when(
-            F.col("role").isin("assistant", "tool"),
-            F.struct("turn_idx", "role", "ts"),
-        )
-    ).over(w)
-    lat = F.unix_micros(F.col("nxt.ts").cast("timestamp")) - F.unix_micros(
-        F.col("ts").cast("timestamp")
-    )
-    return (
-        df.withColumn("nxt", nxt)
-        .filter((F.col("role") == "user") & F.col("nxt").isNotNull())
-        .select(
-            "conv_id",
-            F.col("turn_idx").alias("user_turn_idx"),
-            F.col("ts").alias("user_ts"),
-            F.col("nxt.turn_idx").alias("resp_turn_idx"),
-            F.col("nxt.role").alias("resp_role"),
-            F.col("nxt.ts").alias("resp_ts"),
-            lat.alias("latency_us"),
-        )
     )
 
 

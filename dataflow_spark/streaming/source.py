@@ -3,20 +3,14 @@
 Production path is an Iceberg table stream; this container has no Iceberg
 runtime jars, so the equivalent file-based stream (parquet directory with
 ``maxFilesPerTrigger``) carries the same semantics: replayable, offset-
-tracked, schema-stable. ``rate_transcripts`` synthesizes an unbounded
-stream from the rate source for soak tests.
+tracked, schema-stable.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dataflow_spark.schemas import TRANSCRIPTS
-
-TRANSCRIPTS_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-)
 
 
 def file_stream(
@@ -26,18 +20,3 @@ def file_stream(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
-
-
-def rate_transcripts(spark: SparkSession, rows_per_second: int = 10_000) -> DataFrame:
-    """Unbounded synthetic transcript stream from the rate source."""
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-    return rate.select(
-        F.concat(F.lit("conv"), (F.col("value") % 1000).cast("string")).alias("conv_id"),
-        (F.col("value") / 1000).cast("int").alias("turn_idx"),
-        F.when(F.col("value") % 2 == 0, "user").otherwise("assistant").alias("role"),
-        F.concat(F.lit("turn text "), F.col("value").cast("string")).alias("text"),
-        F.lit("").alias("tool"),
-        F.col("timestamp").alias("ts"),
-    )

@@ -63,24 +63,6 @@ def sliding_turn_counts(
     )
 
 
-def session_turn_counts(
-    stream: DataFrame, gap: str = "10 minutes", watermark: str = "2 minutes"
-) -> DataFrame:
-    """Built-in session_window aggregation (counts only; full conversation
-    assembly with ordered text lives in streaming/assembly.py)."""
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "conv_id")
-        .agg(*_agg_cols())
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "conv_id", "n_turns", "n_user", "n_assistant", "n_tool",
-            "total_chars", "max_turn_idx",
-        )
-    )
-
-
 def salted_turn_counts(
     stream: DataFrame,
     window: str = "1 minute",

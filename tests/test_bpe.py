@@ -107,22 +107,11 @@ def test_bpe_udf_encoder_matches_codegen(spark):
     df = _df(spark)
     a = df.select(B.bpe_token_count("text", merges).alias("n")).toPandas()["n"].tolist()
     b = (
-        df.select(
-            B.bpe_token_count_auto("text", merges, max_codegen_merges=0).alias("n")
-        )
+        df.select(B.bpe_token_count_udf(merges)(F.col("text")).alias("n"))
         .toPandas()["n"]
         .tolist()
     )
     assert a == b
-    # dispatch picks codegen at-or-under the threshold
-    c = (
-        df.select(
-            B.bpe_token_count_auto("text", merges, max_codegen_merges=64).alias("n")
-        )
-        .toPandas()["n"]
-        .tolist()
-    )
-    assert a == c
 
 
 def test_bpe_replace_semantics_artifact_preserved(spark):
@@ -197,7 +186,7 @@ def test_train_bpe_local_k1000_and_encode(spark):
     assert len(merges) == 1000
     got = (
         docs.limit(50)
-        .select("text", B.bpe_token_count_auto("text", merges).alias("n"))
+        .select("text", B.bpe_token_count_udf(merges)(F.col("text")).alias("n"))
         .toPandas()
     )
     # compression sanity: fewer tokens than characters, at least one per word

@@ -5,6 +5,7 @@ import json
 import os
 
 from dataflow_spark.datagen import write_transcripts_parquet
+from dataflow_spark.operators import lm as LM
 from dataflow_spark.streaming.app import TranscriptsApp
 
 
@@ -142,7 +143,7 @@ def test_scored_models_artifact_roundtrip(spark, tmp_path):
     app3.release_models()
 
 
-def test_scored_local_scorer_parity_and_dispatch(spark, tmp_path):
+def test_scored_local_scorer_parity_and_dispatch(spark, tmp_path, monkeypatch):
     """r7: score_df dispatches to a shuffle-free pre-folded Arrow scorer
     (lm.local_ppl_udf) when the trained bigram table is driver-sized.
     The local path must produce the SAME rows and values (to the shared
@@ -162,7 +163,7 @@ def test_scored_local_scorer_parity_and_dispatch(spark, tmp_path):
     assert local.equals(join)
 
     # dispatch threshold: a table over the cap keeps the join plan
-    app.LOCAL_SCORE_MAX_BIGRAMS = 1
+    monkeypatch.setattr(LM, "LOCAL_SCORE_MAX_BIGRAMS", 1)
     app._maybe_build_local_scorer()
     assert app._local_scorer is None
     app.release_models()

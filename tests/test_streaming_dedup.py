@@ -139,7 +139,9 @@ def test_compaction_keepset_unchanged(spark, tmp_path):
     d.compact(spark)
     assert d._compaction()["upto"] == 2
     # per-batch dirs reclaimed, state served from the compacted dir only
-    assert len(d._state_dirs()) == 1
+    root = os.path.join(d.state_dir, "bands", d._compaction()["dir"])
+    units = d._state_units()
+    assert units and all(os.path.dirname(u) == root for u in units)
     # new batch of pure duplicates must still be fully dropped
     dup = pdf.iloc[:300].copy()
     dup["rid"] = dup["rid"] + 10_000
@@ -372,17 +374,31 @@ def test_restart_with_different_n_buckets_keeps_exactness(spark, tmp_path):
     d5.process_batch(spark.createDataFrame(dup), 4)
     assert len(out) == n_committed  # every duplicate dropped
 
-    # legacy manifest without a recorded count → skip disabled, still exact
-    import json as _json
 
-    man = d5._compaction()
-    man.pop("n_buckets")
-    with open(d5._manifest, "w") as f:
-        _json.dump(man, f)
-    dup2 = _unique_batch(1)
-    dup2["rid"] = dup2["rid"] + 3_000_000
-    d5.process_batch(spark.createDataFrame(dup2), 5)
-    assert len(out) == n_committed
+def test_missing_sidecar_still_gives_exact_keepset(spark, tmp_path):
+    """A committed unit whose Bloom sidecar is gone cannot be pruned: the
+    sharded probe reads it as a hit, so its keepers still drop their
+    duplicates."""
+    from dataflow_spark.streaming.bloom import bloom_sidecar_path
+
+    out: list[int] = []
+    d = StreamingFirstWinsDedup(
+        str(tmp_path / "state_nosidecar"), order_col="rid",
+        downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
+        compact_every=None,
+    )
+    for b in range(3):
+        d.process_batch(spark.createDataFrame(_unique_batch(b)), b)
+    n_committed = len(out)
+    assert n_committed == 3 * 400
+    os.remove(bloom_sidecar_path(d._batch_dir(1)))
+
+    dup = pd.concat([_unique_batch(1), _unique_batch(2)], ignore_index=True)
+    dup["rid"] = dup["rid"] + 4_000_000
+    d.process_batch(spark.createDataFrame(dup), 3)
+    assert len(out) == n_committed  # every duplicate dropped
+    assert d.last_state_read["prefilter_mode"] == "driver"
+    assert d.last_state_read["units_read"] >= 2
 
 
 def test_probe_job_count_independent_of_unit_count(spark, tmp_path):

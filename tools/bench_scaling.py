@@ -182,7 +182,7 @@ def main() -> None:
         return round(speedup / (hi / lo), 3)
 
     report = {"low": r_lo, "high": r_hi, "machine_cpu_ceiling_efficiency": ceiling}
-    for leg in ("batch", "stream", "assembly", "assembly_tws", "dedup", "scored"):
+    for leg in ("batch", "stream", "assembly", "dedup", "scored"):
         if f"{leg}_turns_per_sec" in r_lo:
             report[f"{leg}_scaling_efficiency"] = eff(f"{leg}_turns_per_sec")
             report[f"{leg}_efficiency_vs_ceiling"] = round(

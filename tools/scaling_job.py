@@ -270,34 +270,6 @@ def main() -> None:
         shutil.rmtree(ddir, ignore_errors=True)
         shutil.rmtree(ck4, ignore_errors=True)
 
-    # ---- stateful mode, Spark-4 processor API (needs RocksDB provider)
-    if "assembly_tws" in modes:
-        from dataflow_spark.streaming.assembly import assemble_conversations_tws
-
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        ck3 = tempfile.mkdtemp(prefix="dfs_scale_ck3_")
-        t0 = time.time()
-        tq = (
-            assemble_conversations_tws(
-                file_stream(spark, data_dir, max_files_per_trigger=16),
-                gap_seconds=600,
-                watermark="2 minutes",
-            )
-            .writeStream.format("noop")
-            .option("checkpointLocation", ck3)
-            .trigger(availableNow=True)
-            .start()
-        )
-        tq.awaitTermination()
-        tws_s = time.time() - t0
-        result["assembly_tws_s"] = round(tws_s, 2)
-        result["assembly_tws_turns_per_sec"] = round(args.turns / tws_s, 1)
-        shutil.rmtree(ck3, ignore_errors=True)
-
     print(json.dumps(result))
     spark.stop()
 
