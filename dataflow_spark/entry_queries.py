@@ -29,7 +29,7 @@ from dataflow_spark.functions.filters import (
     apply_filters,
     with_filter_columns,
 )
-from dataflow_spark.functions.refiners import REFINERS
+from dataflow_spark.functions.refiners import REFINERS, refiner_column
 from dataflow_spark.operators import dedup as D
 from dataflow_spark.operators import lm as LM
 from dataflow_spark.operators import sampling as SAMP
@@ -215,7 +215,7 @@ _REFINER_ORACLES["remove_stopwords"] = (
 def _refiner_query(name: str):
     def q(spark: SparkSession, sf: str) -> DataFrame:
         df = _t(spark, sf, "documents")
-        return df.select("doc_id", REFINERS[name].native(F.col("text")).alias("text"))
+        return df.select("doc_id", refiner_column(name, F.col("text")).alias("text"))
 
     return q
 
@@ -929,9 +929,10 @@ def _q_score_token_count_bpe(spark, sf):
     from dataflow_spark.operators.bpe import bpe_token_count, train_bpe_local
 
     df = _t(spark, sf, "documents")
-    # train_bpe_local == train_bpe exactly (pytest-pinned tie-break and
-    # replace semantics); it replaces k driver-coordinated Spark jobs with
-    # one vocab-sized collect + a C-speed driver merge loop
+    # train_bpe_local equals the distributed merge loop exactly
+    # (pytest-pinned tie-break and replace semantics); it replaces k
+    # driver-coordinated Spark jobs with one vocab-sized collect + a
+    # C-speed driver merge loop
     merges = train_bpe_local(df, "text", n_merges=_BPE_K)
     return df.select(
         "doc_id", bpe_token_count("text", merges).alias("n_tokens_bpe")
@@ -5225,20 +5226,12 @@ def build_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "sketch_profile": _q_sketch_profile,
             "answer_extraction": _q_answer_extraction,
             "category_classify": _q_category_classify,
-            "refine_spelling": lambda spark, sf: _t(spark, sf, "documents").select(
-                "doc_id",
-                __import__(
-                    "dataflow_spark.functions.refiners", fromlist=["refiner_udf"]
-                ).refiner_udf("spelling")(F.col("text")).alias("text"),
-            ),
-            "refine_stem": lambda spark, sf: _t(spark, sf, "documents").select(
-                "doc_id",
-                __import__(
-                    "dataflow_spark.functions.refiners", fromlist=["refiner_udf"]
-                ).refiner_udf("stem")(F.col("text")).alias("text"),
-            ),
         }
     )
+    # refiners with no Catalyst form run their Arrow kernel and have no
+    # oracle: the gate checks their row counts only
+    for name in ("spelling", "stem"):
+        q[f"refine_{name}"] = _refiner_query(name)
     return q
 
 

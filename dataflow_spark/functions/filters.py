@@ -6,9 +6,11 @@ keep rows passing the predicate. Here each filter is:
 
 * ``native(c) -> (metric: Column, keep: Column)`` — pure Catalyst
   expressions (higher-order array functions, regexp_count, translate…);
-  whole-stage-codegen-friendly, no Python on the hot path;
+  whole-stage-codegen-friendly, no Python. ``with_filter_columns`` and
+  ``apply_filter(s)`` always run this;
 * ``kernel(s: pd.Series) -> (metric, keep)`` — vectorized pandas parity
-  implementation.
+  implementation, reached through ``filter_udf``: the reference tests
+  compare ``native`` against.
 
 Empty/null texts: metric is null/0 and the row is DROPPED by every filter
 except where noted (the reference's operators would compute 0/era on empty
@@ -602,7 +604,8 @@ FILTERS: dict[str, TextFilter] = {
 
 
 def filter_udf(name: str):
-    """pandas_udf returning struct(metric, keep) for the parity path."""
+    """pandas_udf returning struct(metric, keep) from the filter's pandas
+    kernel — the parity reference that tests compare ``native`` against."""
     flt = FILTERS[name]
     schema = T.StructType(
         [
@@ -619,23 +622,15 @@ def filter_udf(name: str):
     return _udf
 
 
-def with_filter_columns(
-    df: DataFrame, name: str, col: str = "text", mode: str = "native"
-) -> DataFrame:
+def with_filter_columns(df: DataFrame, name: str, col: str = "text") -> DataFrame:
     """Add ``<name>_metric`` and ``<name>_keep`` columns (label archetype)."""
-    flt = FILTERS[name]
-    if mode == "native":
-        metric, keep = flt.native(F.col(col))
-        return df.withColumn(f"{name}_metric", metric).withColumn(
-            f"{name}_keep", F.coalesce(keep, F.lit(False))
-        )
-    res = filter_udf(name)(F.col(col))
-    return df.withColumn(f"{name}_metric", res["metric"]).withColumn(
-        f"{name}_keep", F.coalesce(res["keep"], F.lit(False))
+    metric, keep = FILTERS[name].native(F.col(col))
+    return df.withColumn(f"{name}_metric", metric).withColumn(
+        f"{name}_keep", F.coalesce(keep, F.lit(False))
     )
 
 
-def apply_filter(df: DataFrame, name: str, col: str = "text", mode: str = "native") -> DataFrame:
+def apply_filter(df: DataFrame, name: str, col: str = "text") -> DataFrame:
     """Keep only passing rows.
 
     r8: one Filter node per filter instead of the former
@@ -645,15 +640,11 @@ def apply_filter(df: DataFrame, name: str, col: str = "text", mode: str = "nativ
     ``with_filter_columns`` directly). An 8-filter chain now adds 8
     plan nodes instead of 32, which is pure driver-side
     construction/analysis latency removed from every composed query."""
-    flt = FILTERS[name]
-    if mode == "native":
-        _metric, keep = flt.native(F.col(col))
-        return df.where(F.coalesce(keep, F.lit(False)))
-    res = filter_udf(name)(F.col(col))
-    return df.where(F.coalesce(res["keep"], F.lit(False)))
+    _metric, keep = FILTERS[name].native(F.col(col))
+    return df.where(F.coalesce(keep, F.lit(False)))
 
 
-def apply_filters(df: DataFrame, names: list[str], col: str = "text", mode: str = "native") -> DataFrame:
+def apply_filters(df: DataFrame, names: list[str], col: str = "text") -> DataFrame:
     for n in names:
-        df = apply_filter(df, n, col, mode)
+        df = apply_filter(df, n, col)
     return df

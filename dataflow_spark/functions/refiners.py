@@ -5,11 +5,15 @@ Reference archetype: each refiner overwrites ``input_key`` row by row (e.g.
 Here each refiner is a pure column transform with two implementations:
 
 * ``kernel(s: pd.Series) -> pd.Series`` — Arrow-vectorized pandas, exact
-  Python string semantics (the parity path, used inside a pandas_udf);
+  Python string semantics (run inside a pandas_udf by ``refiner_udf``);
 * ``native(col) -> Column`` — Catalyst expression (JVM codegen hot path),
   present when provably equivalent on the engine's documented input domain
   (ASCII-dominant web text). Unicode-edge caveats are noted per refiner;
   pytest asserts native == kernel on the dirty synthetic corpus.
+
+``refiner_column``/``apply_refiner`` run ``native`` whenever a refiner
+has one and the kernel otherwise; the choice follows from the refiner,
+never from the caller.
 
 Null semantics: null text stays null; empty string maps per Python rules.
 """
@@ -488,7 +492,9 @@ REFINERS: dict[str, Refiner] = {
 
 
 def refiner_udf(name: str):
-    """Arrow pandas_udf for the parity path of one refiner."""
+    """Arrow pandas_udf running one refiner's pandas kernel: the only path
+    of a refiner without a Catalyst form, and the parity reference for
+    the rest."""
     kernel = REFINERS[name].kernel
 
     @F.pandas_udf(T.StringType())
@@ -498,19 +504,19 @@ def refiner_udf(name: str):
     return _udf
 
 
-def apply_refiner(
-    df: DataFrame, name: str, col: str = "text", mode: str = "native"
-) -> DataFrame:
-    """Rewrite ``col`` in place (the reference's refine-in-place shape)."""
+def refiner_column(name: str, c: Column) -> Column:
+    """``c`` rewritten by one refiner: its Catalyst expression when it has
+    one, its Arrow kernel otherwise (``stem``, ``spelling``)."""
     r = REFINERS[name]
-    if mode == "native" and r.native is not None:
-        return df.withColumn(col, r.native(F.col(col)))
-    return df.withColumn(col, refiner_udf(name)(F.col(col)))
+    return r.native(c) if r.native is not None else refiner_udf(name)(c)
 
 
-def apply_refiners(
-    df: DataFrame, names: list[str], col: str = "text", mode: str = "native"
-) -> DataFrame:
+def apply_refiner(df: DataFrame, name: str, col: str = "text") -> DataFrame:
+    """Rewrite ``col`` in place (the reference's refine-in-place shape)."""
+    return df.withColumn(col, refiner_column(name, F.col(col)))
+
+
+def apply_refiners(df: DataFrame, names: list[str], col: str = "text") -> DataFrame:
     for n in names:
-        df = apply_refiner(df, n, col, mode)
+        df = apply_refiner(df, n, col)
     return df

@@ -62,3 +62,12 @@ def widen_for_compute(df, min_ratio: int = 2):
     if df.rdd.getNumPartitions() < sc.defaultParallelism // min_ratio:
         return df.repartition(sc.defaultParallelism)
     return df
+
+
+def driver_sized(df, cap: int) -> list | None:
+    """The rows of ``df`` when there are at most ``cap`` of them, else
+    None — the one size dispatch between a driver-local path and its
+    distributed twin. A single bounded ``limit(cap + 1)`` collect: an
+    over-cap input costs ``cap + 1`` rows on the driver, never more."""
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None

@@ -123,7 +123,6 @@ def read_db_paginated(
     where_sql: str = "",
     order_col: str | None = None,
     columns: str = "*",
-    keyset: bool = False,
 ) -> DataFrame:
     """Paginated DB scan — MyScaleDBStorage.read analogue (storage.py:
     341-490; the LIMIT/OFFSET page construction is :405-415), parallelized
@@ -131,50 +130,37 @@ def read_db_paginated(
 
     ``make_conn`` must be a picklable zero-arg factory returning a DB-API
     connection (each task opens its own — the Spark-JDBC partitioned-read
-    shape). One driver-side COUNT sizes the page range; every page then
-    reads ``SELECT {columns} FROM table [WHERE ...] ORDER BY {order_col}
-    LIMIT page_size OFFSET page*page_size`` inside ``mapInPandas``.
-    ``order_col`` is required when the source engine does not guarantee a
-    stable scan order (OFFSET without ORDER BY is engine-dependent — the
-    reference inherits ClickHouse's stable parts order), and it must be
-    UNIQUE: each page runs as an independent query, and ties spanning a
-    page boundary are ordered arbitrarily per execution, duplicating some
-    rows and dropping others. The WHERE clause is pushed into every page
-    query, so source-side predicate pruning happens before rows ever
-    reach Spark.
+    shape). The WHERE clause is pushed into every page query, so
+    source-side predicate pruning happens before rows ever reach Spark.
+    The page plan follows from ``order_col``:
 
-    SNAPSHOT CONTRACT (default OFFSET mode): each page is an independent
-    query/transaction, so concurrent inserts or deletes shift LIMIT/OFFSET
-    boundaries *between* page fetches and silently duplicate or drop rows
-    even with a unique ``order_col``. The source table must be static for
-    the duration of the scan (or each page must read from the same
-    snapshot/consistent view — e.g. a REPEATABLE READ session per page
-    pinned to one snapshot, which plain DB-API cannot express generically).
-
-    ``keyset=True`` (requires ``order_col``) is the scale-safe variant:
-    one driver-side probe computes the first key of every page via
-    ``row_number() OVER (ORDER BY order_col)`` — a single O(N) server-side
-    pass — and each Spark task then range-scans
-    ``WHERE order_col >= lo AND order_col < hi ORDER BY order_col``.
-    No OFFSET anywhere, so the source engine never re-scans earlier pages
-    (OFFSET mode is O(pages²) server-side) and an index on ``order_col``
-    turns every page into a seek. Because the key ranges PARTITION the key
-    space, concurrent inserts can never be read twice (a row falls in
-    exactly one range); rows inserted into an already-fetched range are
-    simply not seen — append-mostly tables degrade gracefully instead of
-    corrupting the scan."""
-    # Parenthesize the pushed predicate: keyset mode appends
+    * with ``order_col`` (keyset pages): one driver-side probe computes
+      the first key of every page via ``row_number() OVER (ORDER BY
+      order_col)`` — a single O(N) server-side pass — and each Spark task
+      range-scans ``WHERE order_col >= lo AND order_col < hi ORDER BY
+      order_col``. No OFFSET anywhere, so the source engine never
+      re-scans earlier pages (OFFSET is O(pages²) server-side) and an
+      index on ``order_col`` turns every page into a seek. The key ranges
+      PARTITION the key space, so no row present for the whole scan is
+      read twice or missed, even under ties or concurrent inserts; rows
+      inserted into an already-fetched range are simply not seen.
+    * without it (the reference's shape): one driver-side COUNT sizes the
+      page range and every page reads ``SELECT {columns} FROM table
+      [WHERE ...] LIMIT page_size OFFSET page*page_size``. This relies on
+      the source engine's scan order being stable (the reference inherits
+      ClickHouse's stable parts order) and the table being static for the
+      duration of the scan: each page is an independent query, so
+      concurrent inserts or deletes shift the page boundaries between
+      fetches and duplicate or drop rows."""
+    # Parenthesize the pushed predicate: keyset pages append
     # " AND order_col >= ?" to this clause, and a top-level OR in
     # where_sql would otherwise bind the range condition to only the
     # right disjunct (every page re-returning the left disjunct's rows).
     where = f" WHERE ({where_sql})" if where_sql else ""
-    if keyset:
-        if not order_col:
-            raise ValueError("keyset pagination requires order_col")
+    if order_col:
         return _read_db_keyset(
             spark, make_conn, table, schema, page_size, where, order_col, columns
         )
-    order = f" ORDER BY {order_col}" if order_col else ""
     conn = make_conn()
     try:
         cur = conn.execute(f"SELECT count(*) FROM {table}{where}")
@@ -191,7 +177,7 @@ def read_db_paginated(
                 c = make_conn()
                 try:
                     cur = c.execute(
-                        f"SELECT {columns} FROM {table}{where}{order} "
+                        f"SELECT {columns} FROM {table}{where} "
                         f"LIMIT {page_size} OFFSET {int(page) * page_size}"
                     )
                     rows = cur.fetchall()

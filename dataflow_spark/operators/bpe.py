@@ -8,8 +8,8 @@ TRAINED on the corpus with exact-integer determinism instead of stubbed
 with ``ceil(chars/4)``; the estimator survives as the documented
 fallback).
 
-The whole algorithm — training and encoding — runs as Catalyst string
-expressions (whole-stage codegen, no Python anywhere):
+Encoding runs as Catalyst string expressions (whole-stage codegen, no
+Python anywhere):
 
 * a word's symbol sequence is one STRING with U+001F (unit separator)
   between adjacent symbols: ``"hello"`` ⇒ ``"h␟e␟l␟l␟o"``;
@@ -24,16 +24,16 @@ expressions (whole-stage codegen, no Python anywhere):
   boundary;
 * ``token_count = #US + #RS + 1`` on the merged string (0 for empty).
 
-Training is one word-frequency shuffle, then per merge step one
-pair-count aggregation (map-side combinable) + a 1-row driver collect +
-one codegen'd ``replace`` — k driver-coordinated jobs over the DISTINCT
-word table (vocabulary-sized, not corpus-sized). At 100 TB the documented
-lever is ``sample_fraction``: deterministic md5-arithmetic Bernoulli
-sampling of documents (operators/sampling.py semantics) BEFORE word
-counting, so training cost is bounded while counting stays exact over
-the full corpus. Ties in pair counts break on the lexicographically
+Training (``train_bpe_local``) is one distributed word-frequency shuffle
+whose DISTINCT word table (vocabulary-sized, not corpus-sized) is
+collected once; the merge loop then runs on the driver with the same
+replace semantics. Ties in pair counts break on the lexicographically
 smallest separated pair string — byte-order comparison, identical in
-Spark and DuckDB.
+Spark and DuckDB. The distributed Catalyst merge loop (k
+driver-coordinated jobs) lives in ``tests/reference_kernels.py`` as the
+reference the local trainer is pinned to. At 100 TB, train on a
+``sample_hash_fraction`` document sample so V stays bounded; counting
+with the learned table stays exact over the full corpus.
 
 The DuckDB oracle (entry_queries._bpe_*) replays the ENTIRE training
 loop — k unrolled pair-count CTEs with the same tie-break — plus the
@@ -81,116 +81,22 @@ def _interspersed_words(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free a ``localCheckpoint`` generation's blocks eagerly.
-    ``DataFrame.unpersist`` only talks to the CacheManager and is a no-op
-    for checkpoint blocks; the blocks live on the underlying RDD held by
-    the plan's LogicalRDD node. Classic-mode reach-through; on any other
-    backend the ContextCleaner reclaims the blocks once the generation's
-    reference is dropped (bounded here: ≤2 generations are ever live)."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 - non-classic backend / already gone
-        pass
-
-
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 12,
-    sample_fraction: float | None = None,
-    sample_seed: str = "bpe",
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` ordered BPE merges from the corpus.
-
-    Deterministic: pair counts are exact integers; the argmax breaks ties
-    on the smallest separated pair string. ``sample_fraction`` applies
-    the deterministic md5-hash Bernoulli document sample before counting
-    (the 100-TB training lever; counting with the learned table remains
-    exact over everything)."""
-    if sample_fraction is not None:
-        from dataflow_spark.operators.sampling import sample_hash_fraction
-
-        df = sample_hash_fraction(df, [text_col], sample_fraction, seed=sample_seed)
-    # localCheckpoint, not persist: a persisted generation still carries
-    # its FULL logical lineage, and Catalyst re-optimizes that whole
-    # k-deep plan every iteration before the cache can match — measured
-    # super-linear (3 s at k=5, 15 s at k=15, 470 s at k=20 on an 11-doc
-    # corpus). The checkpoint replaces the plan root with the
-    # materialized blocks, so per-iteration optimizer cost is constant.
-    # eager=False: the top-pair collect below is what materializes the
-    # current generation — no extra jobs.
-    state = _interspersed_words(df, text_col).localCheckpoint(eager=False)
-    prev = None  # the previous generation, released one step late: until
-    # the current generation materializes, its plan still reads the
-    # previous one's blocks
-    merges: list[tuple[str, str]] = []
-    try:
-        for _ in range(n_merges):
-            syms = F.split("w", US)
-            # guard single-symbol words BEFORE sequence(): Spark's
-            # sequence(1, 0) counts DOWN ([1, 0]) instead of returning
-            # empty, and element_at(·, 0) throws under ANSI
-            pairs = (
-                state.filter(F.size(syms) >= 2)
-                .select(
-                    F.explode(
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(syms) - 1),
-                            lambda i: F.concat_ws(
-                                US, F.element_at(syms, i), F.element_at(syms, i + 1)
-                            ),
-                        )
-                    ).alias("pair"),
-                    "cnt",
-                )
-            )
-            top = (
-                pairs.groupBy("pair")
-                .agg(F.sum("cnt").alias("n"))
-                .orderBy(F.col("n").desc(), F.col("pair").asc())
-                .limit(1)
-                .collect()
-            )
-            if prev is not None:
-                _release_checkpoint(prev)
-                prev = None
-            if not top:
-                break  # every word is a single token already
-            a, b = top[0]["pair"].split(US)
-            merges.append((a, b))
-            nxt = state.select(
-                F.replace(
-                    F.col("w"), F.lit(a + US + b), F.lit(a + b)
-                ).alias("w"),
-                "cnt",
-            ).localCheckpoint(eager=False)
-            prev, state = state, nxt
-    finally:
-        _release_checkpoint(state)
-        if prev is not None:
-            _release_checkpoint(prev)
-    return merges
-
-
 def train_bpe_local(
     df: DataFrame,
     text_col: str = "text",
     n_merges: int = 12,
-    sample_fraction: float | None = None,
-    sample_seed: str = "bpe",
-    max_words: int | None = None,
 ) -> list[tuple[str, str]]:
-    """``train_bpe`` at realistic merge counts (r5 VERDICT ask #3): the
-    distributed path runs k driver-coordinated jobs over the word table —
-    fine at k=12, hours of round-trip latency at a 30k-merge vocabulary
-    regardless of cluster size. Here the DISTINCT word-count table (VOCAB-
-    sized, not corpus-sized — the quantity that makes this sound) is
-    computed distributed, collected ONCE via Arrow, and the merge loop
-    runs driver-local with a lazy-deletion heap + incremental pair-count
-    maintenance.
+    """Learn ``n_merges`` ordered BPE merges from the corpus. A
+    distributed merge loop would run k driver-coordinated jobs over the
+    word table — fine at k=12, hours of round-trip latency at a
+    30k-merge vocabulary regardless of cluster size. Here the DISTINCT
+    word-count table (VOCAB-sized, not corpus-sized — the quantity that
+    makes this sound) is computed distributed, collected ONCE via Arrow,
+    and the merge loop runs driver-local with a lazy-deletion heap +
+    incremental pair-count maintenance.
 
-    EXACT equivalence with ``train_bpe`` (pytest-pinned), including:
+    EXACT equivalence with the distributed Catalyst loop kept as the test
+    reference (``tests/reference_kernels.train_bpe``), including:
 
     * the tie-break (count desc, then lexicographically smallest separated
       pair — Python code-point order == Spark UTF-8 byte order, a UTF-8
@@ -203,18 +109,9 @@ def train_bpe_local(
       pair index (an index would miss the cross-boundary matches).
 
     Cost: O(k · V) C-speed substring scans plus incremental recounts of
-    only the words a merge changed. ``sample_fraction`` bounds V via the
-    document sample; ``max_words`` additionally keeps only the most
-    frequent words (count desc, word asc — deterministic), the documented
-    lever for open-vocabulary web corpora."""
-    if sample_fraction is not None:
-        from dataflow_spark.operators.sampling import sample_hash_fraction
-
-        df = sample_hash_fraction(df, [text_col], sample_fraction, seed=sample_seed)
-    wdf = _interspersed_words(df, text_col)
-    if max_words is not None:
-        wdf = wdf.orderBy(F.col("cnt").desc(), F.col("w").asc()).limit(max_words)
-    pdf = wdf.toPandas()  # vocabulary-sized; the ONLY collect
+    only the words a merge changed. To bound V on an open-vocabulary
+    corpus, pass a ``sample_hash_fraction`` document sample as ``df``."""
+    pdf = _interspersed_words(df, text_col).toPandas()  # vocabulary-sized; the ONLY collect
 
     import heapq
 
@@ -267,7 +164,7 @@ def train_bpe_local(
         # one fresh heap entry per NET-changed pair — including pairs that
         # only DECREASED (their old entries are now stale and will be
         # discarded; without a fresh entry a still-live pair would vanish
-        # from the heap and the table would diverge from train_bpe)
+        # from the heap and the table would diverge from the reference)
         for p in changed:
             n = counts.get(p, 0)
             if n > 0:

@@ -30,16 +30,23 @@ terms are folded IN TOKEN ORDER (array fold, not a shuffle-order sum), so
 the final sum is the same IEEE op sequence in Spark and the DuckDB
 oracle — FP-bit-reproducible end to end.
 
-Everything is native Catalyst (split/zip_with/explode/groupBy/aggregate);
-no Python on any path.
+``driver_sized`` picks each model's scoring path from its type table's
+size: under ``LOCAL_SCORE_MAX_BIGRAMS`` / ``LOCAL_SCORE_MAX_TRIGRAMS``
+rows, one collect pre-folds it into an Arrow scorer; above, the native
+Catalyst join plan runs (no Python). The oracle pins both.
 """
 
 from __future__ import annotations
+
+import math
+import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from dataflow_spark.functions.sparkutil import driver_sized
 
 TOKEN_SPLIT = "\\s+"
 BOS = "<s>"
@@ -63,6 +70,8 @@ CJK_CLASS = (
     "[\u0e00-\u0e7f\u0e80-\u0eff\u1000-\u109f\u1780-\u17ff"
     "\u3040-\u30ff\u3400-\u4dbf\u4e00-\u9fff\uf900-\ufaff]"
 )
+_CJK_RE = re.compile(CJK_CLASS)
+_WS_RE = re.compile(r"(?a)\s+")
 
 
 def segment_unsegmented(c):
@@ -87,7 +96,7 @@ def release_persists(handles) -> None:
     Long-lived sessions (bench loops, the composed streaming app) call
     this after materializing results so cached model tables don't
     accrete until the nondeterministic ContextCleaner runs — the same
-    per-run lifecycle discipline as train_bpe and the streaming dedup."""
+    per-run lifecycle discipline as the streaming dedup."""
     for h in handles:
         try:
             h.unpersist()
@@ -134,20 +143,12 @@ def bigram_counts(
     df: DataFrame,
     text_col: str = "text",
     persists: list | None = None,
-    compute_v: bool = True,
 ):
-    """→ (bigram counts DF[w1, w2, c], context counts DF[w1, ctx], V).
-
-    One explode + two groupBys; counts combine map-side. V = distinct
-    token count of the corpus (BOS excluded — it never appears as w2's
-    prediction target vocabulary entry). The bigram TYPE table is
-    persisted; pass ``persists`` to receive the handle and release it
-    via ``release_persists`` once results are materialized.
-
-    ``compute_v=False`` skips the distinct-count job and returns
-    ``v=None`` — for callers that are about to collect the whole type
-    table anyway (the local-scorer dispatch) and can derive the same
-    exact integer as ``len({w2})`` from the collected rows."""
+    """→ (bigram counts DF[w1, w2, c], context counts DF[w1, ctx]); V is
+    ``bigram_vocab``'s. One explode + two groupBys; counts combine
+    map-side. The bigram TYPE table is persisted; pass ``persists`` to
+    receive the handle and release it via ``release_persists`` once
+    results are materialized."""
     big = df.select(
         F.explode(_bigrams(tokens_expr(F.col(text_col)))).alias("bg")
     ).select("bg.w1", "bg.w2")
@@ -156,8 +157,17 @@ def bigram_counts(
     # the vocabulary, instead of re-scanning the corpus per derived table
     bc = _track(big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c")), persists)
     cc = bc.groupBy("w1").agg(F.sum("c").alias("ctx"))
-    v = bc.select("w2").distinct().count() if compute_v else None
-    return bc, cc, v
+    return bc, cc
+
+
+def bigram_vocab(bc: DataFrame, rows: list | None = None) -> int:
+    """V = distinct token count of the corpus (BOS excluded — it never
+    appears as a w2 prediction target): ``len({w2})`` of the collected
+    type-table ``rows`` when there are any, else one distinct-count job.
+    Both are the same exact integer."""
+    if rows is not None:
+        return len({r["w2"] for r in rows})
+    return bc.select("w2").distinct().count()
 
 
 # Above this many bigram types the trained model no longer counts as
@@ -167,24 +177,29 @@ def bigram_counts(
 LOCAL_SCORE_MAX_BIGRAMS = 200_000
 
 
-def build_local_ppl(bc: DataFrame, v: int | None = None, k: int = 1):
-    """Collect the bigram count table when it is driver-sized (at most
-    ``LOCAL_SCORE_MAX_BIGRAMS`` types) and pre-fold it into the
-    shuffle-free Arrow scorer (``local_ppl_udf``); return None above the
-    cap (callers keep the join plan). The context table is re-derived
-    from the pairs by exact integer summation, so no second collect is
-    needed; likewise ``v=None`` derives V as ``len({w2})`` of the
-    collected rows, the same exact integer ``bigram_counts`` computes."""
-    head = bc.limit(LOCAL_SCORE_MAX_BIGRAMS + 1).collect()
-    if len(head) > LOCAL_SCORE_MAX_BIGRAMS:
-        return None
-    if v is None:
-        v = len({r["w2"] for r in head})
-    pairs = {(r["w1"], r["w2"]): r["c"] for r in head}
+def build_local_ppl(rows: list, v: int, k: int = 1):
+    """Pre-fold a collected bigram type table (``driver_sized`` rows of
+    ``bigram_counts``) into the shuffle-free Arrow scorer
+    (``local_ppl_udf``). The context table is re-derived from the pairs
+    by exact integer summation, so no second collect is needed."""
+    pairs = {(r["w1"], r["w2"]): r["c"] for r in rows}
     ctx: dict = {}
     for (w1, _w2), c in pairs.items():
         ctx[w1] = ctx.get(w1, 0) + c
     return local_ppl_udf(pairs, ctx, v, k=k)
+
+
+def _local_scores(df: DataFrame, id_col: str, text_col: str, udf, round_to) -> DataFrame:
+    """(id, n_tokens, ppl) from a pre-folded ``struct<ppl, n>`` scorer,
+    rounded like the join plans."""
+    out = df.select(F.col(id_col), udf(F.col(text_col)).alias("__s")).select(
+        id_col,
+        F.col("__s.n").cast("int").alias("n_tokens"),
+        F.col("__s.ppl").alias("ppl"),
+    )
+    if round_to is not None:
+        out = out.withColumn("ppl", F.round("ppl", round_to))
+    return out
 
 
 def bigram_perplexity(
@@ -194,43 +209,26 @@ def bigram_perplexity(
     k: int = 1,
     round_to: int | None = 6,
     persists: list | None = None,
-    local: str = "auto",
 ) -> DataFrame:
     """(id, n_tokens, ppl) for every row of ``df`` — the model is trained
     on ``df`` itself. Rows with no tokens get ppl NULL (nothing to score).
 
-    Scale shape: the two count tables shuffle once each. Scoring with
-    ``local="auto"`` (default) dispatches to the pre-folded Arrow scorer
-    when the trained table is driver-sized — one narrow map, no explode,
-    no join; the DuckDB oracle pins both paths to the same values. Above
-    the cap (or with ``local="never"``) the join plan runs: exploded
+    Scale shape: the two count tables shuffle once each. When the trained
+    table is driver-sized, scoring is the pre-folded Arrow scorer — one
+    narrow map, no explode, no join, and V comes from the collected rows
+    (no distinct-count job). Above the cap the join plan runs: exploded
     bigrams against the count tables (broadcast when small — AQE
     decides), then one groupBy re-packs per-doc terms in token order for
     the ordered fold. No window over the corpus, no driver data beyond
-    the vocab-bounded collect."""
-    # r8: defer the V distinct-count job — on the local path the whole
-    # type table is collected anyway and build_local_ppl derives V from
-    # the collected rows, the identical exact integer; only the fallback
-    # runs the distinct count. One distributed job fewer per trained
-    # scoring query.
-    bc, cc, _ = bigram_counts(df, text_col, persists, compute_v=False)
-    if local == "auto":
-        udf = build_local_ppl(bc, k=k)
-        if udf is not None:
-            out = df.select(
-                F.col(id_col), udf(F.col(text_col)).alias("__s")
-            ).select(
-                id_col,
-                F.col("__s.n").cast("int").alias("n_tokens"),
-                F.col("__s.ppl").alias("ppl"),
-            )
-            if round_to is not None:
-                out = out.withColumn("ppl", F.round("ppl", round_to))
-            return out
-    # fallback path: over-cap or local="never"
-    v = bc.select("w2").distinct().count()
+    the vocab-bounded collect. The DuckDB oracle pins both paths to the
+    same values."""
+    bc, cc = bigram_counts(df, text_col, persists)
+    rows = driver_sized(bc, LOCAL_SCORE_MAX_BIGRAMS)
+    if rows is not None:
+        udf = build_local_ppl(rows, bigram_vocab(bc, rows), k=k)
+        return _local_scores(df, id_col, text_col, udf, round_to)
     return bigram_ppl_with_tables(
-        df, id_col, bc, cc, v, text_col=text_col, k=k, round_to=round_to
+        df, id_col, bc, cc, bigram_vocab(bc), text_col=text_col, k=k, round_to=round_to
     )
 
 
@@ -295,9 +293,6 @@ def local_ppl_udf(pair_counts: dict, ctx_counts: dict, v: int, k: int = 1):
     join plan to the last ulp of libm-vs-JVM ``log`` (both stream and
     batch twins share whichever path dispatch picks, so the byte-match
     contract never straddles the seam)."""
-    import math
-    import re
-
     kv = k * v
     lp = {
         (w1, w2): math.log((c + k) / (ctx_counts.get(w1, 0) + kv))
@@ -305,35 +300,54 @@ def local_ppl_udf(pair_counts: dict, ctx_counts: dict, v: int, k: int = 1):
     }
     lp_ctx = {w1: math.log(k / (ctx + kv)) for w1, ctx in ctx_counts.items()}
     lp_unk = math.log(k / kv)
-    cjk = re.compile(CJK_CLASS)
-    ws = re.compile(r"(?a)\s+")
+
+    def log_prob_sum(toks):
+        acc, prev = 0.0, BOS
+        for w in toks:
+            x = lp.get((prev, w))
+            acc += lp_ctx.get(prev, lp_unk) if x is None else x
+            prev = w
+        return acc
+
+    return _ppl_udf(log_prob_sum)
+
+
+def py_tokens(t) -> list:
+    """Python twin of ``tokens_expr`` for the local scorers: lowercase,
+    CJK code points spaced out, ASCII-``\\s`` split (``(?a)\\s+``, the
+    twin of Java's default regex), empties dropped."""
+    t = ("" if t is None else t).lower()
+    if _CJK_RE.search(t):
+        t = _CJK_RE.sub(r" \g<0> ", t)
+    return [w for w in _WS_RE.split(t) if w]
+
+
+def _ppl_udf(log_prob_sum):
+    """Arrow scorer ``text -> struct<ppl double, n int>``:
+    ``exp(−log_prob_sum(tokens)/n)``, NULL ppl for token-less rows."""
 
     @F.pandas_udf("struct<ppl: double, n: int>")
     def score(s: pd.Series) -> pd.DataFrame:
         ppls, ns = [], []
         for t in s:
-            t = ("" if t is None else t).lower()
-            if cjk.search(t):
-                t = cjk.sub(r" \g<0> ", t)
-            toks = [w for w in ws.split(t) if w]
+            toks = py_tokens(t)
             n = len(toks)
-            if n == 0:
-                ppls.append(None)
-                ns.append(0)
-                continue
-            acc = 0.0
-            prev = BOS
-            for w in toks:
-                x = lp.get((prev, w))
-                if x is None:
-                    x = lp_ctx.get(prev, lp_unk)
-                acc += x
-                prev = w
-            ppls.append(math.exp(-acc / n))
+            ppls.append(math.exp(-log_prob_sum(toks) / n) if n else None)
             ns.append(n)
         return pd.DataFrame({"ppl": ppls, "n": ns})
 
     return score
+
+
+def token_order_sum():
+    """Aggregate: the group's ``lp`` terms summed in ``pos`` order (sorted
+    collect + sequential fold), so the sum is the same IEEE op sequence
+    whatever the shuffle order — the one the oracle's list_sum replays."""
+    return F.aggregate(
+        F.transform(F.array_sort(F.collect_list(F.struct("pos", "lp"))), lambda s: s["lp"]),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def _chain_ppl(toks: DataFrame, bc, cc, v: int, k: int, seeded: bool = False) -> DataFrame:
@@ -359,14 +373,7 @@ def _chain_ppl(toks: DataFrame, bc, cc, v: int, k: int, seeded: bool = False) ->
         )
     )
     per_doc = terms.groupBy("id").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lp"))), lambda s: s["lp"]
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("lp_sum"),
-        F.count(F.lit(1)).alias("n"),
+        token_order_sum().alias("lp_sum"), F.count(F.lit(1)).alias("n")
     )
     return per_doc.select("id", F.exp(-F.col("lp_sum") / F.col("n")).alias("ppl_raw"))
 
@@ -399,7 +406,8 @@ def superfiltering_ifd(
             "\n", F.coalesce(F.col(instr_col), F.lit("")), F.coalesce(F.col(resp_col), F.lit(""))
         ).alias("text")
     )
-    bc, cc, v = bigram_counts(whole, "text", persists)
+    bc, cc = bigram_counts(whole, "text", persists)
+    v = bigram_vocab(bc)
     base = df.select(
         F.col(id_col).alias("id"),
         tokens_expr(F.col(resp_col)).alias("tk"),
@@ -515,9 +523,6 @@ def kn_local_ppl_udf(t3_rows, discount: float = 0.75):
     rounding and the DuckDB oracle pins both. Per-trigram log-probs are
     memoized (pure function of the trigram; Zipf makes distinct
     trigrams per batch ≪ tokens)."""
-    import math
-    import re
-
     d = float(discount)
     c3: dict = {}
     ctx3: dict = {}
@@ -537,8 +542,6 @@ def kn_local_ppl_udf(t3_rows, discount: float = 0.75):
     total2 = len(cont2)
     u = len({k[2] for k in c3})
     p1_denom = float(total2 + u + 1)
-    cjk = re.compile(CJK_CLASS)
-    ws = re.compile(r"(?a)\s+")
     lp_cache: dict = {}
 
     def lp(w1, w2, w3):
@@ -564,29 +567,14 @@ def kn_local_ppl_udf(t3_rows, discount: float = 0.75):
         lp_cache[(w1, w2, w3)] = x
         return x
 
-    @F.pandas_udf("struct<ppl: double, n: int>")
-    def score(s: pd.Series) -> pd.DataFrame:
-        ppls, ns = [], []
-        for t in s:
-            t = ("" if t is None else t).lower()
-            if cjk.search(t):
-                t = cjk.sub(r" \g<0> ", t)
-            toks = [w for w in ws.split(t) if w]
-            n = len(toks)
-            if n == 0:
-                ppls.append(None)
-                ns.append(0)
-                continue
-            acc = 0.0
-            u1, u2 = BOS, BOS
-            for w in toks:
-                acc += lp(u1, u2, w)
-                u1, u2 = u2, w
-            ppls.append(math.exp(-acc / n))
-            ns.append(n)
-        return pd.DataFrame({"ppl": ppls, "n": ns})
+    def log_prob_sum(toks):
+        acc, u1, u2 = 0.0, BOS, BOS
+        for w in toks:
+            acc += lp(u1, u2, w)
+            u1, u2 = u2, w
+        return acc
 
-    return score
+    return _ppl_udf(log_prob_sum)
 
 
 def trigram_kn_perplexity(
@@ -596,7 +584,6 @@ def trigram_kn_perplexity(
     discount: float = 0.75,
     round_to: int | None = 6,
     persists: list | None = None,
-    local: str = "auto",
 ) -> DataFrame:
     """(id, n_tokens, ppl) under interpolated Kneser-Ney trigrams trained
     on ``df`` itself — the KenLM-semantics upgrade of the bigram add-k
@@ -616,27 +603,17 @@ def trigram_kn_perplexity(
     DuckDB oracle replays bit-identical doubles; per-doc log terms fold
     in token order exactly like the bigram model.
 
-    ``local="auto"`` (default): when the trigram TYPE table is
-    driver-sized, scoring dispatches to the pre-folded Arrow scorer
-    (``kn_local_ppl_udf``) — every derived table re-counted from one
-    collect, one narrow map, no five-way join — with the oracle pinning
-    both paths. ``"never"`` keeps the join plan (the unbounded-vocab
-    path)."""
+    When the trigram TYPE table is driver-sized, scoring is the
+    pre-folded Arrow scorer (``kn_local_ppl_udf``) — every derived table
+    re-counted from one collect, one narrow map, no five-way join — with
+    the oracle pinning both paths. Above the cap the join plan runs (the
+    unbounded-vocab path)."""
     t3 = trigram_type_table(df, text_col, persists)
-    if local == "auto":
-        head = t3.limit(LOCAL_SCORE_MAX_TRIGRAMS + 1).collect()
-        if len(head) <= LOCAL_SCORE_MAX_TRIGRAMS:
-            udf = kn_local_ppl_udf(head, discount)
-            out = df.select(
-                F.col(id_col), udf(F.col(text_col)).alias("__s")
-            ).select(
-                id_col,
-                F.col("__s.n").cast("int").alias("n_tokens"),
-                F.col("__s.ppl").alias("ppl"),
-            )
-            if round_to is not None:
-                out = out.withColumn("ppl", F.round("ppl", round_to))
-            return out
+    rows = driver_sized(t3, LOCAL_SCORE_MAX_TRIGRAMS)
+    if rows is not None:
+        return _local_scores(
+            df, id_col, text_col, kn_local_ppl_udf(rows, discount), round_to
+        )
     _t3, ctx3, cont2, mid, cont1, total2, u = trigram_kn_tables(
         df, text_col, persists, t3=t3
     )
@@ -680,14 +657,7 @@ def trigram_kn_perplexity(
     ).otherwise(p2)
     scored = terms.select("id", "pos", F.log(p3).alias("lp"))
     per_doc = scored.groupBy("id").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lp"))), lambda s: s["lp"]
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("lp_sum"),
-        F.count(F.lit(1)).alias("n"),
+        token_order_sum().alias("lp_sum"), F.count(F.lit(1)).alias("n")
     )
     out = toks.join(per_doc, "id", "left").select(
         F.col("id").alias(id_col),

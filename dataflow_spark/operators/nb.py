@@ -15,12 +15,15 @@ DuckDB oracle:
 Counts are distributed aggregations (map-side combinable); per-document
 log terms fold IN TOKEN ORDER (the LM discipline) so the sum is the
 same IEEE sequence in Spark and DuckDB; the argmax breaks ties on the
-smallest label. Scoring explodes tokens × classes (a broadcast of the
-tiny class table) and joins the class-conditional count table — one
-shuffle on (label, token), AQE-sized. At 100 TB the levers are the
-standard ones: the count tables are vocabulary×C-sized (not corpus),
-train on a ``sample_hash_fraction`` slice, and prune scoring to a
-candidate class subset when C is large.
+smallest label. When the trained (label, word) table is driver-sized
+(``driver_sized`` against ``NB_LOCAL_MAX_WC_ROWS``), scoring is one
+pre-folded Arrow map (``nb_local_scorer``). Above the cap, scoring
+explodes tokens × classes (a broadcast of the tiny class table) and
+joins the class-conditional count table — one shuffle on (label,
+token), AQE-sized. At 100 TB the levers are the standard ones: the count
+tables are vocabulary×C-sized (not corpus), train on a
+``sample_hash_fraction`` slice, and prune scoring to a candidate class
+subset when C is large. Tests reach the join plan by lowering the cap.
 
 Plan-shape note (measured, r5): an alternative formulation that avoids
 the tokens×C row blowup — per-token log-prob VECTORS via a word→map
@@ -40,7 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dataflow_spark.operators.lm import _track, tokens_expr
+from dataflow_spark.functions.sparkutil import driver_sized
+from dataflow_spark.operators.lm import _track, py_tokens, token_order_sum, tokens_expr
 
 
 def char_trigrams_expr(c):
@@ -68,15 +72,16 @@ def nb_train(
     text_col: str = "text",
     persists: list | None = None,
     features=None,
-    compute_v: bool = True,
 ):
-    """→ (word_counts[label,w,c], class_stats[label,n_tok,n_docs], V,
+    """→ (word_counts[label,w,c], class_stats[label,n_tok,n_docs],
     n_docs_total). One token explode; every other table derives from the
     cached (label, word) TYPE table or a metadata-cheap groupBy. Pass
     ``persists`` to receive the cached handle; release it with
     ``lm.release_persists`` after materializing results. ``features``
     (Column → array<string>) swaps the feature space — word tokens by
-    default, e.g. ``char_trigrams_expr`` for a character-level model."""
+    default, e.g. ``char_trigrams_expr`` for a character-level model.
+    V (distinct words) is left to the caller: ``len({w})`` of the
+    collected table on the local path, a distinct count otherwise."""
     feats = features or tokens_expr
     toks = df.select(
         F.col(label_col).alias("label"),
@@ -88,9 +93,8 @@ def nb_train(
         F.count(F.lit(1)).alias("n_docs")
     )
     cls = cs.join(dc, "label")
-    v = wc.select("w").distinct().count() if compute_v else None
     n_total = df.count()
-    return wc, cls, v, n_total
+    return wc, cls, n_total
 
 
 def nb_classify(
@@ -100,7 +104,6 @@ def nb_classify(
     text_col: str = "text",
     round_to: int | None = 6,
     persists: list | None = None,
-    local: str = "auto",
     features=None,
     features_kernel=None,
 ) -> DataFrame:
@@ -109,29 +112,23 @@ def nb_classify(
     class and assigned the argmax (ties → smallest label). Token-less
     documents get the prior-only argmax.
 
-    ``local="auto"`` (default): when the trained (label, word) table is
-    driver-sized (≤ NB_LOCAL_MAX_WC_ROWS), scoring dispatches to the
-    pre-folded Arrow scorer (``nb_local_scorer``) — one narrow map, no
-    tokens×C explode, no (label, token) shuffle — producing the
-    identical values (the DuckDB oracle pins both paths). ``"never"``
-    keeps the distributed join plan, the unbounded-vocabulary path.
+    When the trained (label, word) table is driver-sized (at most
+    ``NB_LOCAL_MAX_WC_ROWS`` rows), scoring is the pre-folded Arrow
+    scorer (``nb_local_scorer``) — one narrow map, no tokens×C explode,
+    no (label, token) shuffle — producing the identical values (the
+    DuckDB oracle pins both paths). Above the cap the distributed join
+    plan runs, the unbounded-vocabulary path.
 
     ``features``/``features_kernel`` swap the feature space (Column →
     array<string> expression + its Python twin for the local path);
     supplying ``features`` without its kernel keeps the join plan."""
-    # r8: defer the V distinct-count job — the local path collects the
-    # whole (label, word) table anyway and V == len({w}) of the
-    # collected rows, the identical exact integer; the fallback computes
-    # it as before. One distributed job fewer per classify query.
-    wc, cls, v, n_total = nb_train(
-        df, label_col, text_col, persists, features, compute_v=False
-    )
-    if local == "auto" and (features is None or features_kernel is not None):
-        head = wc.limit(NB_LOCAL_MAX_WC_ROWS + 1).collect()
-        if len(head) <= NB_LOCAL_MAX_WC_ROWS:
-            v = len({r["w"] for r in head})
+    wc, cls, n_total = nb_train(df, label_col, text_col, persists, features)
+    if features is None or features_kernel is not None:
+        rows = driver_sized(wc, NB_LOCAL_MAX_WC_ROWS)
+        if rows is not None:
             udf = nb_local_scorer(
-                head, cls.collect(), v, n_total, tokenizer=features_kernel
+                rows, cls.collect(), len({r["w"] for r in rows}), n_total,
+                tokenizer=features_kernel,
             )
             out = df.select(
                 F.col(id_col), udf(F.col(text_col)).alias("__s")
@@ -143,8 +140,7 @@ def nb_classify(
             if round_to is not None:
                 out = out.withColumn("score", F.round("score", round_to))
             return out
-    if v is None:  # fallback path: over-cap or local="never"
-        v = wc.select("w").distinct().count()
+    v = wc.select("w").distinct().count()
     feats = features or tokens_expr
     toks = df.select(
         F.col(id_col).alias("id"), feats(F.col(text_col)).alias("tk")
@@ -163,16 +159,7 @@ def nb_classify(
             ).alias("lp"),
         )
     )
-    folded = scored.groupBy("id", "label").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lp"))),
-                lambda s: s["lp"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("s")
-    )
+    folded = scored.groupBy("id", "label").agg(token_order_sum().alias("s"))
     pri = cls.select(
         "label",
         F.log(
@@ -234,9 +221,6 @@ def nb_local_scorer(wc_rows, cls_rows, v: int, n_total: int, tokenizer=None):
     caller applies the same Spark-side F.round as the join plan (Python
     ``round`` is banker's — it must NOT round here)."""
     import math
-    import re
-
-    from dataflow_spark.operators.lm import CJK_CLASS
 
     labels = sorted(r["label"] for r in cls_rows)
     li = {lab: i for i, lab in enumerate(labels)}
@@ -255,16 +239,7 @@ def nb_local_scorer(wc_rows, cls_rows, v: int, n_total: int, tokenizer=None):
             vec = vecs[w] = default.copy()
         i = li[r["label"]]
         vec[i] = math.log((r["c"] + 1.0) / denom[i])
-    cjk = re.compile(CJK_CLASS)
-    ws = re.compile(r"(?a)\s+")
-
-    def _default_tokens(t):
-        t = ("" if t is None else t).lower()
-        if cjk.search(t):
-            t = cjk.sub(r" \g<0> ", t)
-        return [w for w in ws.split(t) if w]
-
-    tok = tokenizer or _default_tokens
+    tok = tokenizer or py_tokens
 
     @F.pandas_udf("struct<pred_label: string, score: double>")
     def score(s: pd.Series) -> pd.DataFrame:

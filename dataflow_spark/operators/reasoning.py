@@ -3,7 +3,7 @@
 * ``answer_token_length_filter`` — AnswerTokenLengthFilter
   (reasoning/filter/answer_token_length_filter.py:11-46): the reference
   counts tokens with a pretrained Qwen tokenizer; since r5 the filter
-  takes a corpus-trained BPE merge table (``operators.bpe.train_bpe``)
+  takes a corpus-trained BPE merge table (``operators.bpe.train_bpe_local``)
   and counts REAL tokens with it (exact-integer training, exact DuckDB
   oracle), falling back to the pinned ``ceil(chars/4)`` estimate only
   when no tokenizer has been trained. The filter shape (keep iff
@@ -41,7 +41,7 @@ def answer_token_length_filter(
 ) -> DataFrame:
     """Keep rows whose answer's token count is within the cap (reference
     returns 1/0 per row then keeps the 1s). With ``merges`` (a
-    corpus-trained table from ``operators.bpe.train_bpe``) the count is
+    corpus-trained table from ``operators.bpe.train_bpe_local``) the count is
     the REAL BPE tokenization — the r5 default for trained pipelines;
     without one it falls back to the pinned ``ceil(chars/4)`` estimator
     (the only option when no tokenizer has been trained yet)."""

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from dataflow_spark.functions.sparkutil import driver_sized
+
 
 def _dot(a: str, b: str):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
@@ -255,7 +257,6 @@ def ivf_train(
     iters: int = 2,
     train_fraction: float | None = None,
     sample_seed: str = "ivf",
-    local_max_rows: int | None = IVF_LOCAL_MAX_TRAIN_ROWS,
 ) -> list[list[int]]:
     """Deterministic Lloyd's k-means over quantized integer vectors.
 
@@ -274,27 +275,25 @@ def ivf_train(
     iteration, so training cost scales with the sample while assignment
     semantics over the full corpus are unchanged.
 
-    r8: when the (sampled) train set is driver-sized (≤
-    ``local_max_rows``, checked with the standard ``limit(cap+1)``
-    guard), the whole Lloyd loop runs driver-local in numpy
-    (``_lloyd_local`` — bit-identical replay, pytest-pinned): ONE
-    bounded collect instead of 1 + 2·iters driver-coordinated jobs.
-    Above the cap (or ``local_max_rows=None``) the distributed loop
-    below runs unchanged."""
+    r8: when the (sampled) train set is driver-sized (``driver_sized``
+    against ``IVF_LOCAL_MAX_TRAIN_ROWS``), the whole Lloyd loop runs
+    driver-local in numpy (``_lloyd_local`` — bit-identical replay,
+    pytest-pinned): ONE bounded collect instead of 1 + 2·iters
+    driver-coordinated jobs. Above the cap the distributed loop below
+    runs unchanged."""
     train = int_corpus.select(id_col, vec_col)
     if train_fraction is not None:
         from dataflow_spark.operators.sampling import sample_hash_fraction
 
         train = sample_hash_fraction(train, [id_col], train_fraction, seed=sample_seed)
-    if local_max_rows:
-        head = train.limit(local_max_rows + 1).collect()
-        if len(head) <= local_max_rows:
-            return _lloyd_local(
-                [r[id_col] for r in head],
-                [list(r[vec_col]) for r in head],
-                n_centroids,
-                iters,
-            )
+    rows = driver_sized(train, IVF_LOCAL_MAX_TRAIN_ROWS)
+    if rows is not None:
+        return _lloyd_local(
+            [r[id_col] for r in rows],
+            [list(r[vec_col]) for r in rows],
+            n_centroids,
+            iters,
+        )
     # distributed fallback: materialize the train set once — every Lloyd
     # iteration re-reads it (callers no longer pre-checkpoint)
     train = train.localCheckpoint()

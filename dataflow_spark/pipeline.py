@@ -51,21 +51,21 @@ class Pipeline:
         self._compiled = False
         return self
 
-    def refine(self, refiner: str, col: str = "text", mode: str = "native") -> "Pipeline":
+    def refine(self, refiner: str, col: str = "text") -> "Pipeline":
         if refiner not in REFINERS:
             raise KeyError(f"unknown refiner {refiner!r}")
         return self.add(
             f"refine:{refiner}",
-            lambda df, r=refiner: apply_refiner(df, r, col, mode),
+            lambda df, r=refiner: apply_refiner(df, r, col),
             input_keys=[col],
         )
 
-    def filter(self, flt: str, col: str = "text", mode: str = "native") -> "Pipeline":
+    def filter(self, flt: str, col: str = "text") -> "Pipeline":
         if flt not in FILTERS:
             raise KeyError(f"unknown filter {flt!r}")
         return self.add(
             f"filter:{flt}",
-            lambda df, f=flt: apply_filter(df, f, col, mode),
+            lambda df, f=flt: apply_filter(df, f, col),
             input_keys=[col],
         )
 

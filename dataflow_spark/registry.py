@@ -17,8 +17,8 @@ from pyspark.sql import DataFrame
 def _refiner_factory(name: str):
     from dataflow_spark.functions.refiners import apply_refiner
 
-    def op(df: DataFrame, col: str = "text", mode: str = "native") -> DataFrame:
-        return apply_refiner(df, name, col, mode)
+    def op(df: DataFrame, col: str = "text") -> DataFrame:
+        return apply_refiner(df, name, col)
 
     return op
 
@@ -26,8 +26,8 @@ def _refiner_factory(name: str):
 def _filter_factory(name: str):
     from dataflow_spark.functions.filters import apply_filter
 
-    def op(df: DataFrame, col: str = "text", mode: str = "native") -> DataFrame:
-        return apply_filter(df, name, col, mode)
+    def op(df: DataFrame, col: str = "text") -> DataFrame:
+        return apply_filter(df, name, col)
 
     return op
 

@@ -128,6 +128,7 @@ class TranscriptsApp:
             return
         from pyspark.sql import functions as F
 
+        from dataflow_spark.functions.sparkutil import driver_sized
         from dataflow_spark.operators import lm as LM
         from dataflow_spark.operators.bpe import train_bpe_local
         from dataflow_spark.schemas import TRANSCRIPTS
@@ -150,7 +151,7 @@ class TranscriptsApp:
             self.models_fingerprint_stale = (
                 meta.get("corpus_fingerprint") != self._corpus_fingerprint()
             )
-            self._maybe_build_local_scorer()
+            self._maybe_build_local_scorer(driver_sized(bc, LM.LOCAL_SCORE_MAX_BIGRAMS))
             return
         # one refiner pass over the corpus, shared by both trainings
         static = apply_refiners(
@@ -158,7 +159,11 @@ class TranscriptsApp:
         ).persist()
         self._lm_persists.append(static)
         self._bpe_table = train_bpe_local(static, "text", n_merges=self.bpe_merges)
-        bc, cc, v = LM.bigram_counts(static, "text", self._lm_persists)
+        bc, cc = LM.bigram_counts(static, "text", self._lm_persists)
+        # one collect serves both the local scorer and V; the distinct
+        # count runs only when the table is over the cap
+        rows = driver_sized(bc, LM.LOCAL_SCORE_MAX_BIGRAMS)
+        v = LM.bigram_vocab(bc, rows)
         self._lm_tables = (bc, cc, v)
         self.models_loaded_from_artifact = False
         self.models_fingerprint_stale = False
@@ -178,13 +183,14 @@ class TranscriptsApp:
                 f,
             )
         os.replace(tmp, meta_path)
-        self._maybe_build_local_scorer()
+        self._maybe_build_local_scorer(rows)
 
-    def _maybe_build_local_scorer(self):
+    def _maybe_build_local_scorer(self, rows):
         """Pre-fold the trained tables into a shuffle-free Arrow scorer
-        (lm.local_ppl_udf) when they are driver-sized (at most
-        ``lm.LOCAL_SCORE_MAX_BIGRAMS`` bigram types); otherwise score_df
-        keeps the broadcast-join plan. The scored artifact is
+        (lm.local_ppl_udf) when they are driver-sized (``rows``, the
+        ``driver_sized`` collect against ``lm.LOCAL_SCORE_MAX_BIGRAMS``
+        bigram types); with ``rows`` None score_df keeps the
+        broadcast-join plan. The scored artifact is
         vocab-bounded by construction, so real corpora sit far below the
         cap at any scale the stage trains on one machine. Measured at
         sf0.1/local[32]: the join plan's score-only stream is ~15.8 s,
@@ -206,8 +212,8 @@ class TranscriptsApp:
         from dataflow_spark.operators.bpe import bpe_token_count_udf
 
         self._bpe_counter = bpe_token_count_udf(self._bpe_table)
-        bc, _cc, v = self._lm_tables
-        self._local_scorer = LM.build_local_ppl(bc, v, k=1)
+        v = self._lm_tables[2]
+        self._local_scorer = None if rows is None else LM.build_local_ppl(rows, v, k=1)
 
     def release_models(self):
         """Unpersist the trained LM tables (mirrors the per-batch

@@ -47,8 +47,8 @@ possible hit, so a lost sidecar costs bytes read, never exactness.
 scale test asserts flat).
 
 Bounded filter METADATA as well (not just bounded reads): below
-``prefilter_broadcast_max_bytes`` of total sidecars, the batch-side
-prefilter is a union-of-Blooms broadcast — broadcast PER IMMUTABLE UNIT,
+``PREFILTER_BROADCAST_MAX_BYTES`` (64 MiB) of total sidecars, the
+batch-side prefilter is a union-of-Blooms broadcast — broadcast PER IMMUTABLE UNIT,
 created when a unit first commits and destroyed when compaction replaces
 it, so a micro-batch ships only the previous batch's new filter and
 nothing accretes over the stream's life. Past the cap the prefilter
@@ -61,10 +61,11 @@ executor-side ``bit_or`` aggregation of a Bloom-bitmask column
 the cap and destroyed right after each chunk's single job. No band hash
 ever reaches the driver in either mode; compaction buckets none of the
 batch's bands hash into are never loaded at all, and driver Bloom memory
-is LRU-capped (``bloom_cache_max_bytes``). The remaining unbounded
-quantity is sidecar bytes ON DISK (~2 B/committed band — 2 TB at 10^12
-bands, cheap storage); the event-time retention horizon stays the knob
-that bounds even that.
+is LRU-capped (``BLOOM_CACHE_MAX_BYTES``, 256 MiB). Both caps are
+module constants, so the prefilter mode follows from the state's size
+alone. The remaining unbounded quantity is sidecar bytes ON DISK (~2
+B/committed band — 2 TB at 10^12 bands, cheap storage); the event-time
+retention horizon stays the knob that bounds even that.
 """
 
 from __future__ import annotations
@@ -94,6 +95,16 @@ from dataflow_spark.streaming.bloom import (
 )
 from dataflow_spark.streaming.sink import append_commit, read_commit_log
 
+
+# Past this many bytes of Bloom sidecars, the batch-side prefilter
+# switches from one union broadcast to the sharded distributed probe —
+# broadcast filter bytes per batch drop to ZERO and compaction buckets the
+# batch's bands don't hash into are never even loaded. It also caps the
+# transient broadcast bytes of each over-cap probe chunk. Read at call
+# time, so tests reach the sharded probe by lowering it.
+PREFILTER_BROADCAST_MAX_BYTES = 64 << 20
+# LRU cap on driver-side Bloom sidecar memory (read at construction)
+BLOOM_CACHE_MAX_BYTES = 256 << 20
 
 # over-cap probe chunk width: 16 mask words → up to 1008 unit filters
 # decided per single scan of the batch (the bound guards the width of the
@@ -140,8 +151,6 @@ class StreamingFirstWinsDedup:
         ts_col: str | None = None,
         compact_every: int | None = 32,
         n_buckets: int = 16,
-        prefilter_broadcast_max_bytes: int = 64 << 20,
-        bloom_cache_max_bytes: int = 256 << 20,
     ):
         self.state_dir = state_dir
         self.order_col = order_col
@@ -153,12 +162,7 @@ class StreamingFirstWinsDedup:
         self.ts_col = ts_col
         self.compact_every = compact_every
         self.n_buckets = n_buckets
-        # past this many bytes of Bloom sidecars, the batch-side prefilter
-        # switches from one union broadcast to the sharded driver probe —
-        # broadcast filter bytes per batch drop to ZERO and compaction
-        # buckets the batch's bands don't hash into are never even loaded
-        self.prefilter_broadcast_max_bytes = prefilter_broadcast_max_bytes
-        self._bloom_cache = BloomCache(bloom_cache_max_bytes)
+        self._bloom_cache = BloomCache(BLOOM_CACHE_MAX_BYTES)
         self._unit_bcs: dict = {}  # unit dir -> (Broadcast, nbytes)
         self._gen_bytes = 0  # live broadcast bytes across all unit filters
         self._batch_persists: list = []  # per-batch persisted DFs to release
@@ -311,7 +315,7 @@ class StreamingFirstWinsDedup:
           the executors shrinks the batch to candidates before anything is
           collected. The broadcast is per-GENERATION (see
           ``_generation_udf``), not per-batch.
-        * ``driver`` (state past ``prefilter_broadcast_max_bytes``, or a
+        * ``driver`` (state past ``PREFILTER_BROADCAST_MAX_BYTES``, or a
           unit with a missing or unreadable sidecar) — no standing
           broadcast at all: per-generation filters are dropped and the
           whole batch band table becomes the probe source; a sidecar-less
@@ -347,7 +351,7 @@ class StreamingFirstWinsDedup:
             F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
         )
         might = None
-        if None not in sizes and sum(sizes) <= self.prefilter_broadcast_max_bytes:
+        if None not in sizes and sum(sizes) <= PREFILTER_BROADCAST_MAX_BYTES:
             might, read["sidecar_bytes_loaded"] = self._generation_udf(spark, units)
         if might is not None:
             # 1a. broadcast prefilter: mostly-new data shrinks to real dups
@@ -434,7 +438,7 @@ class StreamingFirstWinsDedup:
 
         Chunks are bounded by ``_PROBE_MAX_UNITS`` filters (the agg-
         expression width guard — 16 mask words) AND
-        ``prefilter_broadcast_max_bytes`` of transient broadcast, so
+        ``PREFILTER_BROADCAST_MAX_BYTES`` of transient broadcast, so
         probe cost is ONE scan of the (in-memory) persisted batch per
         ~1000 sidecars rather than per 63 (r6 VERDICT ask #5); in
         ``reuse_gen`` mode (broadcast prefilter) the per-generation unit
@@ -460,7 +464,7 @@ class StreamingFirstWinsDedup:
         for u, sz in probeable:
             if cur and (
                 len(cur) >= _PROBE_MAX_UNITS
-                or cur_bytes + sz > self.prefilter_broadcast_max_bytes
+                or cur_bytes + sz > PREFILTER_BROADCAST_MAX_BYTES
             ):
                 chunks.append(cur)
                 cur, cur_bytes = [], 0

@@ -1,9 +1,11 @@
 """Filter parity: keep-set equality vs pinned reference kernels, plus
-native==parity across the full filter registry."""
+native==parity across the full filter registry. The parity side is the
+filter's pandas kernel, run through ``filter_udf``."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from dataflow_spark.functions.filters import FILTERS, with_filter_columns
+from dataflow_spark.functions.filters import FILTERS, filter_udf, with_filter_columns
 from tests import reference_kernels as RK
 
 CHECKED = {
@@ -19,8 +21,13 @@ CHECKED = {
 
 
 def _keeps(df, name, mode):
+    if mode == "native":
+        labeled = with_filter_columns(df, name)
+    else:
+        keep = filter_udf(name)(F.col("text"))["keep"]
+        labeled = df.withColumn(f"{name}_keep", F.coalesce(keep, F.lit(False)))
     out = (
-        with_filter_columns(df, name, mode=mode)
+        labeled
         .select("rid", f"{name}_keep")
         .toPandas()
         .sort_values("rid")
@@ -45,7 +52,7 @@ def test_native_equals_parity(corpus_df, name):
 @pytest.mark.parametrize("name", sorted(FILTERS))
 def test_no_python_in_native_plan(corpus_df, name):
     """Native filters must stay JVM-side (whole-stage codegen eligible)."""
-    plan = with_filter_columns(corpus_df, name, mode="native")._jdf.queryExecution().executedPlan().toString()
+    plan = with_filter_columns(corpus_df, name)._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan and "ArrowEval" not in plan
 
 

@@ -159,11 +159,22 @@ def test_read_db_paginated_sqlite(spark, tmp_path):
     assert sorted(r["id"] for r in rows) == [i for i in range(2345) if i % 3 == 0]
     assert all(r["pipeline_id"] == "p2" for r in rows)
 
+    # no order column: the reference's LIMIT/OFFSET pages over sqlite's
+    # stable rowid scan order, WHERE still pushed into every page
+    for where, want in (("", list(range(2345))),
+                        ("pipeline_id = 'p2'", [i for i in range(2345) if i % 3 == 0])):
+        off = read_db_paginated(
+            spark, _sqlite_conn_factory(db), "t", schema, page_size=100,
+            where_sql=where, order_col=None,
+        )
+        assert sorted(r["id"] for r in off.collect()) == want
+
 
 def test_read_db_keyset_matches_offset(spark, tmp_path):
-    """keyset=True (window-probe boundaries + per-task range scans, no
-    OFFSET anywhere) returns row-identical results to the OFFSET default —
-    with and without a pushed WHERE, including a non-contiguous key."""
+    """With ``order_col`` the scan is keyset-paged (window-probe
+    boundaries + per-task range scans, no OFFSET anywhere) and returns
+    exactly the rows a direct SELECT returns — with and without a pushed
+    WHERE, including a non-contiguous key."""
     import sqlite3
 
     db = str(tmp_path / "src.db")
@@ -200,24 +211,19 @@ def test_read_db_keyset_matches_offset(spark, tmp_path):
         ("pipeline_id = 'p2'", p2),
         ("pipeline_id = 'p2' OR payload = 'row-8'", p2 + 1),
     ):
-        kw = dict(page_size=100, order_col="id", where_sql=where)
-        offset_rows = sorted(
-            tuple(r) for r in read_db_paginated(
-                spark, _sqlite_conn_factory(db), "t", schema, **kw
-            ).collect()
+        con = sqlite3.connect(db)
+        direct = sorted(
+            con.execute(f"SELECT * FROM t{' WHERE ' + where if where else ''}").fetchall()
         )
+        con.close()
         keyset_rows = sorted(
             tuple(r) for r in read_db_paginated(
-                spark, _sqlite_conn_factory(db), "t", schema, keyset=True, **kw
+                spark, _sqlite_conn_factory(db), "t", schema,
+                page_size=100, order_col="id", where_sql=where,
             ).collect()
         )
-        assert keyset_rows == offset_rows
+        assert keyset_rows == direct
         assert len(keyset_rows) == want
-
-    with pytest.raises(ValueError, match="order_col"):
-        read_db_paginated(
-            spark, _sqlite_conn_factory(db), "t", schema, keyset=True
-        )
 
 
 def test_write_db_sqlite_roundtrip(spark, tmp_path):

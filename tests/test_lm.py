@@ -151,14 +151,18 @@ def test_superfiltering_ifd_deterministic(spark):
     assert a == b
 
 
-def test_no_python_in_ppl_plan(spark):
+def test_no_python_in_ppl_plan(spark, monkeypatch):
     """The join plan (the unbounded-vocab path) stays Python-free; the
     r7 auto-local path is deliberately ONE vectorized ArrowEvalPython
     map and must agree with the join plan value for value."""
+    from dataflow_spark.operators import lm as LM
+
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(4), "text": TEXTS[:4]})
     )
-    joined = bigram_perplexity(df, "doc_id", local="never")
+    with monkeypatch.context() as m:  # cap 0: every table is over it
+        m.setattr(LM, "LOCAL_SCORE_MAX_BIGRAMS", 0)
+        joined = bigram_perplexity(df, "doc_id")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert marker not in plan
@@ -228,15 +232,18 @@ def test_trigram_kn_orders_real_text_below_shuffled(spark):
     assert got[0] < got[len(base)]
 
 
-def test_no_python_in_trigram_kn_plan(spark):
+def test_no_python_in_trigram_kn_plan(spark, monkeypatch):
     """Join plan Python-free; the r7 local KN path is one vectorized
     ArrowEvalPython map and must agree value for value."""
+    from dataflow_spark.operators import lm as LM
     from dataflow_spark.operators.lm import trigram_kn_perplexity
 
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(4), "text": TEXTS[:4]})
     )
-    joined = trigram_kn_perplexity(df, "doc_id", local="never")
+    with monkeypatch.context() as m:  # cap 0: every table is over it
+        m.setattr(LM, "LOCAL_SCORE_MAX_TRIGRAMS", 0)
+        joined = trigram_kn_perplexity(df, "doc_id")
     local = trigram_kn_perplexity(df, "doc_id")  # auto -> local here
     lplan = local._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" in lplan and "Exchange" not in lplan

@@ -5,6 +5,7 @@ accumulation, tie-break) and actually discriminate classes."""
 import pandas as pd
 import pytest
 
+from dataflow_spark.operators import nb as NB
 from dataflow_spark.operators.nb import nb_classify
 from tests.reference_kernels import nb_classify_seq
 
@@ -53,13 +54,15 @@ def test_nb_matches_sequential(spark):
     assert got[90][0] == exp[90][1] and got[91][0] == exp[91][1]
 
 
-def test_nb_no_python_in_plan(spark):
+def test_nb_no_python_in_plan(spark, monkeypatch):
     """The distributed join plan (the unbounded-vocabulary path) stays
     Python-free; the r7 local path is deliberately ONE ArrowEvalPython
     narrow map (vectorized, not row-at-a-time) and must agree with the
     join plan value-for-value — both pinned here."""
     df = spark.createDataFrame(_corpus())
-    joined = nb_classify(df, "doc_id", "source", local="never")
+    with monkeypatch.context() as m:  # cap 0: every table is over it
+        m.setattr(NB, "NB_LOCAL_MAX_WC_ROWS", 0)
+        joined = nb_classify(df, "doc_id", "source")
     plan = joined._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert marker not in plan
@@ -97,9 +100,8 @@ def test_nb_chargram_features(spark):
         df, "doc_id", "lang",
         features=char_trigrams_expr, features_kernel=char_trigrams_kernel,
     )
-    joinp = nb_classify(
-        df, "doc_id", "lang", local="never", features=char_trigrams_expr,
-    )
+    # features without their Python kernel: the join plan
+    joinp = nb_classify(df, "doc_id", "lang", features=char_trigrams_expr)
     lrows = {r["doc_id"]: (r["pred_label"], r["score"]) for r in local.collect()}
     jrows = {r["doc_id"]: (r["pred_label"], r["score"]) for r in joinp.collect()}
     assert lrows == jrows

@@ -64,24 +64,29 @@ def test_spark_native_equals_kernel_on_hypothesis_corpus(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "rid long, text string"
     ).cache()
-    from dataflow_spark.functions.filters import with_filter_columns
-    from dataflow_spark.functions.refiners import apply_refiner
+    from pyspark.sql import functions as F
+
+    from dataflow_spark.functions.filters import filter_udf, with_filter_columns
+    from dataflow_spark.functions.refiners import apply_refiner, refiner_udf
 
     for name in ("remove_extra_spaces", "remove_emoji", "remove_html_url",
                  "collapse_repeated_punct", "normalize_text", "remove_stopwords"):
-        a = apply_refiner(df, name, mode="native").select("rid", "text").toPandas()
-        b = apply_refiner(df, name, mode="parity").select("rid", "text").toPandas()
+        a = apply_refiner(df, name).select("rid", "text").toPandas()
+        b = df.select("rid", refiner_udf(name)(F.col("text")).alias("text")).toPandas()
         a, b = a.sort_values("rid"), b.sort_values("rid")
         assert a["text"].tolist() == b["text"].tolist(), name
     for name in ("word_number", "unique_words", "stop_word", "line_start_bullet",
                  "html_entity", "special_character", "no_punc"):
-        a = with_filter_columns(df, name, mode="native").select("rid", f"{name}_keep").toPandas()
-        b = with_filter_columns(df, name, mode="parity").select("rid", f"{name}_keep").toPandas()
+        a = with_filter_columns(df, name).select("rid", f"{name}_keep").toPandas()
+        b = df.select(
+            "rid",
+            F.coalesce(filter_udf(name)(F.col("text"))["keep"], F.lit(False)).alias(f"{name}_keep"),
+        ).toPandas()
         a, b = a.sort_values("rid"), b.sort_values("rid")
         assert a[f"{name}_keep"].tolist() == b[f"{name}_keep"].tolist(), name
 
 
-def test_local_scorers_equal_join_plans_on_adversarial_corpus(spark):
+def test_local_scorers_equal_join_plans_on_adversarial_corpus(spark, monkeypatch):
     """r7: every trained-model scorer has a pre-folded Arrow local path
     and a distributed join plan; on an adversarial generated corpus
     (emoji, CJK runs, controls, URLs, number soup) the two paths must
@@ -90,6 +95,8 @@ def test_local_scorers_equal_join_plans_on_adversarial_corpus(spark):
     oracle gate already pins."""
     import random
 
+    from dataflow_spark.operators import lm as LM
+    from dataflow_spark.operators import nb as NB
     from dataflow_spark.operators.lm import bigram_perplexity, trigram_kn_perplexity
     from dataflow_spark.operators.nb import nb_classify
 
@@ -105,14 +112,14 @@ def test_local_scorers_equal_join_plans_on_adversarial_corpus(spark):
         "doc_id long, text string, source string",
     ).cache()
 
-    for fn, kw in (
-        (bigram_perplexity, {}),
-        (trigram_kn_perplexity, {}),
+    for fn, mod, cap in (
+        (bigram_perplexity, LM, "LOCAL_SCORE_MAX_BIGRAMS"),
+        (trigram_kn_perplexity, LM, "LOCAL_SCORE_MAX_TRIGRAMS"),
+        (lambda d, i: nb_classify(d, i, "source"), NB, "NB_LOCAL_MAX_WC_ROWS"),
     ):
-        a = fn(df, "doc_id", local="never").toPandas().sort_values("doc_id").reset_index(drop=True)
+        with monkeypatch.context() as m:  # cap 0: the join plan
+            m.setattr(mod, cap, 0)
+            joined = fn(df, "doc_id")
+        a = joined.toPandas().sort_values("doc_id").reset_index(drop=True)
         b = fn(df, "doc_id").toPandas()[a.columns.tolist()].sort_values("doc_id").reset_index(drop=True)
-        assert a.equals(b), fn.__name__
-
-    a = nb_classify(df, "doc_id", "source", local="never").toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = nb_classify(df, "doc_id", "source").toPandas()[a.columns.tolist()].sort_values("doc_id").reset_index(drop=True)
-    assert a.equals(b)
+        assert a.equals(b), cap

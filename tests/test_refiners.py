@@ -1,9 +1,11 @@
 """Refiner parity: Spark (native AND pandas_udf) vs pinned reference
-kernels, byte-for-byte under (conv_id, turn_idx) ordering."""
+kernels, byte-for-byte under (conv_id, turn_idx) ordering. The parity
+side is the refiner's pandas kernel, run through ``refiner_udf``."""
 
 import pytest
+from pyspark.sql import functions as F
 
-from dataflow_spark.functions.refiners import REFINERS, apply_refiner
+from dataflow_spark.functions.refiners import REFINERS, apply_refiner, refiner_udf
 from tests import reference_kernels as RK
 
 CHECKED = {
@@ -14,9 +16,13 @@ CHECKED = {
 }
 
 
+def _parity(df, name):
+    return df.withColumn("text", refiner_udf(name)(F.col("text")))
+
+
 def _run(spark_df, name, mode):
     out = (
-        apply_refiner(spark_df, name, mode=mode)
+        (apply_refiner(spark_df, name) if mode == "native" else _parity(spark_df, name))
         .select("rid", "text")
         .toPandas()
         .sort_values("rid")
@@ -75,7 +81,7 @@ def test_null_text_stays_null(spark):
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
     for name in REFINERS:
-        out = apply_refiner(df, name, mode="parity").select("text").first()[0]
+        out = _parity(df, name).select("text").first()[0]
         assert out is None, name
 
 

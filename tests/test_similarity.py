@@ -196,11 +196,12 @@ def test_semdedup_kmeans_semantics(spark):
     )
 
 
-def test_r8_local_lloyd_matches_distributed(spark):
+def test_r8_local_lloyd_matches_distributed(spark, monkeypatch):
     """r8 optimization pin: the driver-local numpy Lloyd replay
     (``_lloyd_local``) and the Arrow assignment map
     (``_assign_cells_udf``) are bit-identical to the distributed
     explode/agg path they replaced — centroids AND per-row cids."""
+    from dataflow_spark.operators import similarity as S
     from dataflow_spark.operators.similarity import (
         _assign_cells,
         _assign_cells_udf,
@@ -213,8 +214,10 @@ def test_r8_local_lloyd_matches_distributed(spark):
     for frac in (None, 0.5):
         c_local = ivf_train(ci, "id", "v", n_centroids=6, iters=2,
                             train_fraction=frac)
-        c_dist = ivf_train(ci, "id", "v", n_centroids=6, iters=2,
-                           train_fraction=frac, local_max_rows=None)
+        with monkeypatch.context() as m:  # cap 0: the distributed loop
+            m.setattr(S, "IVF_LOCAL_MAX_TRAIN_ROWS", 0)
+            c_dist = ivf_train(ci, "id", "v", n_centroids=6, iters=2,
+                               train_fraction=frac)
         assert c_local == c_dist
         a_sql = (
             _assign_cells(ci, "id", "v", c_local).toPandas()

@@ -162,11 +162,51 @@ def test_scored_local_scorer_parity_and_dispatch(spark, tmp_path, monkeypatch):
     assert len(local) > 0
     assert local.equals(join)
 
-    # dispatch threshold: a table over the cap keeps the join plan
-    monkeypatch.setattr(LM, "LOCAL_SCORE_MAX_BIGRAMS", 1)
-    app._maybe_build_local_scorer()
-    assert app._local_scorer is None
+    # dispatch threshold: a table over the cap keeps the join plan (a
+    # restart over the same out_dir reloads the artifact and dispatches
+    # again, now against the lowered cap)
     app.release_models()
+    monkeypatch.setattr(LM, "LOCAL_SCORE_MAX_BIGRAMS", 1)
+    app2 = TranscriptsApp(src_dir=src, out_dir=str(tmp_path / "out"))
+    app2.train_models(spark)
+    assert app2.models_loaded_from_artifact is True
+    assert app2._local_scorer is None
+    app2.release_models()
+
+
+def _train_jobs(spark, app, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "train_models job count")
+    try:
+        app.train_models(spark)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_train_models_takes_v_from_the_local_collect(spark, tmp_path, monkeypatch):
+    """A driver-sized bigram table is collected once for the local
+    scorer, and that collect also gives V: training runs no
+    distinct-count job for it. Over the cap, V comes from the distinct
+    count, and that costs extra jobs. Either way ``meta.json`` carries
+    the same ``v``."""
+    src = write_transcripts_parquet(str(tmp_path / "src"), n_turns=600, seed=3, n_files=1)
+    counts = {}
+    for name, cap in (("local", LM.LOCAL_SCORE_MAX_BIGRAMS), ("over_cap", 1)):
+        monkeypatch.setattr(LM, "LOCAL_SCORE_MAX_BIGRAMS", cap)
+        out = str(tmp_path / name)
+        app = TranscriptsApp(src_dir=src, out_dir=out)
+        counts[name] = _train_jobs(spark, app, f"train-v-{name}")
+        assert app.models_loaded_from_artifact is False
+        assert (app._local_scorer is None) == (name == "over_cap")
+        with open(os.path.join(out, "models", "meta.json")) as f:
+            meta = json.load(f)
+        bc = app._lm_tables[0]
+        assert meta["v"] == app._lm_tables[2] == bc.select("w2").distinct().count()
+        app.release_models()
+    # the over-cap run pays the distinct count on top of the same collect
+    assert counts["local"] < counts["over_cap"]
 
 
 def test_signal_metrics_replay_is_noop(spark, tmp_path):

@@ -6,6 +6,7 @@ import os
 import pandas as pd
 
 from dataflow_spark.datagen import make_transcripts
+from dataflow_spark.streaming import dedup as SD
 from dataflow_spark.streaming.dedup import StreamingFirstWinsDedup, dedup_exact_stream
 from dataflow_spark.streaming.source import file_stream
 from tests import reference_kernels as RK
@@ -234,8 +235,8 @@ def test_compaction_retention_expires_old_state(spark, tmp_path):
     assert len(out) == n_kept * 2
 
 
-def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path):
-    """Past ``prefilter_broadcast_max_bytes`` the prefilter switches to the
+def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path, monkeypatch):
+    """Past ``PREFILTER_BROADCAST_MAX_BYTES`` the prefilter switches to the
     sharded driver probe: per-batch broadcast filter bytes are ZERO no
     matter how large the committed band state grows, compaction buckets
     none of the batch's bands hash into are never loaded from disk, and
@@ -243,11 +244,12 @@ def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path):
     kept = {"bc": [], "drv": []}
     insts = {}
     for mode, cap in (("bc", 1 << 30), ("drv", 0)):
+        monkeypatch.setattr(SD, "PREFILTER_BROADCAST_MAX_BYTES", cap)
         d = StreamingFirstWinsDedup(
             str(tmp_path / f"state_{mode}"), order_col="rid",
             downstream=(lambda m: lambda s, b: kept[m].extend(
                 r.rid for r in s.select("rid").collect()))(mode),
-            compact_every=4, n_buckets=8, prefilter_broadcast_max_bytes=cap,
+            compact_every=4, n_buckets=8,
         )
         insts[mode] = d
         for b in range(8):
@@ -283,8 +285,8 @@ def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path):
     assert len(kept["drv"]) == 7 * 400  # the duplicate row was dropped
 
 
-def test_overcap_probe_never_collects_band_hashes(spark, tmp_path):
-    """r5 VERDICT ask #2: past ``prefilter_broadcast_max_bytes`` the
+def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
+    """r5 VERDICT ask #2: past ``PREFILTER_BROADCAST_MAX_BYTES`` the
     driver's role is UNIT SELECTION — it must never collect the batch's
     band hashes (the old over-cap path collected the full distinct band
     set: ~5M Rows at a 1M-row trigger). With the distributed bitmask
@@ -294,10 +296,11 @@ def test_overcap_probe_never_collects_band_hashes(spark, tmp_path):
     not the batch). Semantics: the known-duplicate half of the big batch
     still drops exactly."""
     out: list[int] = []
+    monkeypatch.setattr(SD, "PREFILTER_BROADCAST_MAX_BYTES", 0)
     d = StreamingFirstWinsDedup(
         str(tmp_path / "state_oc"), order_col="rid",
         downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
-        compact_every=4, n_buckets=8, prefilter_broadcast_max_bytes=0,
+        compact_every=4, n_buckets=8,
     )
     for b in range(6):
         d.process_batch(spark.createDataFrame(_unique_batch(b)), b)

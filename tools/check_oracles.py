@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 import numpy as np
@@ -39,19 +40,47 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns)).reset_index(drop=True)
 
 
+def connect(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per sf table."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def compare(got: pd.DataFrame, exp: pd.DataFrame) -> str | None:
+    """Why the Spark result ``got`` differs from the oracle's ``exp`` (row
+    count, column names, then order-insensitive values), or None."""
+    if len(got) != len(exp):
+        return f"rowcount spark={len(got)} duck={len(exp)}"
+    if sorted(got.columns) != sorted(exp.columns):
+        return f"cols spark={sorted(got.columns)} duck={sorted(exp.columns)}"
+    g, e = canon(got), canon(exp)
+    if g.equals(e):
+        return None
+    neq_cols = [c for c in g.columns if not g[c].equals(e[c])]
+    lines = [f"values differ in {neq_cols}"]
+    for c in neq_cols[:2]:
+        idx = (g[c] != e[c]).idxmax()
+        lines.append(f"      first diff col={c} spark={g[c][idx]!r} duck={e[c][idx]!r}")
+    return "\n".join(lines)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    # Python workers find the package only through PYTHONPATH, which
+    # must be set before the session starts
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     from dataflow_spark.entry_queries import build_oracles, build_queries
     from dataflow_spark.session import get_spark
 
     spark = get_spark("oracle-check", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = connect(sf_dir)
 
     queries, oracles = build_queries(), build_oracles()
     n_pass = n_fail = n_noracle = 0
@@ -71,25 +100,11 @@ def main() -> int:
         try:
             exp = con.execute(oracles[name]).df()
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error {str(e)[:200]}")
-            n_fail += 1
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL  {name}: rowcount spark={len(got)} duck={len(exp)}")
-            n_fail += 1
-            continue
-        if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL  {name}: cols spark={sorted(got.columns)} duck={sorted(exp.columns)}")
-            n_fail += 1
-            continue
-        g, e = canon(got), canon(exp)
-        if not g.equals(e):
-            neq_cols = [c for c in g.columns if not g[c].equals(e[c])]
-            print(f"FAIL  {name}: values differ in {neq_cols}")
-            for c in neq_cols[:2]:
-                mask = g[c] != e[c]
-                idx = mask.idxmax()
-                print(f"      first diff col={c} spark={g[c][idx]!r} duck={e[c][idx]!r}")
+            why = f"duckdb error {str(e)[:200]}"
+        else:
+            why = compare(got, exp)
+        if why is not None:
+            print(f"FAIL  {name}: {why}")
             n_fail += 1
             continue
         print(f"PASS  {name} rows={len(got)}")
