@@ -239,6 +239,11 @@ def _greedy_claim_resolve(
     return pd.DataFrame(out, columns=["id", "keep"])
 
 
+# duplicate populations up to this many member rows resolve in one task
+# (read at call time, so tests reach the component path by lowering it)
+SMALL_GRAPH_MAX_MEMBERS = 500_000
+
+
 def first_wins_bucket_claim(
     df: DataFrame,
     id_col: str,
@@ -247,7 +252,6 @@ def first_wins_bucket_claim(
     prepare=None,
     verify=None,
     min_shared: int = 1,
-    small_graph_threshold: int = 500_000,
 ) -> DataFrame:
     """Filter ``df`` to first-wins survivors given a bucket table
     ``buckets(id, band)`` (id = long order rank; (id, band) pairs distinct).
@@ -263,8 +267,8 @@ def first_wins_bucket_claim(
     the bucket-min id (O(members), immune to hot-bucket pair explosion),
     label-prop components, then one cogrouped applyInPandas whose groups are
     single collision components. When the whole duplicate population is
-    small (<= ``small_graph_threshold`` member rows) the component loop is
-    skipped and one task replays the global scan."""
+    small (<= ``SMALL_GRAPH_MAX_MEMBERS`` member rows) the component loop
+    is skipped and one task replays the global scan."""
     buckets = buckets.select(
         F.col(buckets.columns[0]).alias("id"), F.col(buckets.columns[1]).alias("band")
     )
@@ -280,7 +284,7 @@ def first_wins_bucket_claim(
         return df
 
     need_payload = payload is not None and verify is not None
-    if n_members <= small_graph_threshold:
+    if n_members <= SMALL_GRAPH_MAX_MEMBERS:
         grouped = members.select("id", "band").withColumn("__g", F.lit(0))
         pay = (
             payload.join(members.select("id").distinct(), "id")

@@ -5,10 +5,11 @@ Why: the incremental first-wins dedup anti-joins every micro-batch
 against ALL previously-committed band state. Without pruning that read
 is O(keep-set) per batch — quadratic over the stream's life, the one
 true 10^12-turn scale-killer. With a Bloom sidecar per state *unit*
-(a compaction band-hash bucket or an uncompacted per-batch dir), a batch
-of mostly-new data prefilters to a tiny candidate band set and then
-reads only the units whose Bloom reports a possible hit — per-batch
-state bytes read stay ~flat as the keep-set grows.
+(a compaction band-hash bucket or an uncompacted per-batch dir), one
+executor-side scan of a batch's band hashes against the units' filters
+(``bloom_multimask_udf``) tells the driver which units might hold a hit,
+and only those are read — per-batch state bytes read stay ~flat as the
+keep-set grows.
 
 Correctness: Bloom filters have NO false negatives for inserted keys, so
 pruning can only skip units that provably contain none of the batch's
@@ -40,11 +41,11 @@ BLOOM_K = 7
 # path, bounding task memory at m/8 bytes
 _FLAGS_MAX_BITS = 1 << 28
 BLOOM_BITS_PER_KEY = 16  # with k=7 → false-positive rate ~7e-4
-_SIDEYCAR = "_bloom.npz"  # leading '_' → invisible to Spark's file index
+_SIDECAR = "_bloom.npz"  # leading '_' → invisible to Spark's file index
 
 
 def bloom_sidecar_path(unit_dir: str) -> str:
-    return os.path.join(unit_dir, _SIDEYCAR)
+    return os.path.join(unit_dir, _SIDECAR)
 
 
 def bloom_m_for(n_keys: int) -> int:
@@ -182,69 +183,32 @@ def load_bloom(unit_dir: str):
         return None
 
 
-def make_bloom_broadcast(spark: SparkSession, blooms):
-    """Broadcast a list of ``(bits, m)`` filters once; callers own the
-    lifecycle (``bc.unpersist()/destroy()`` when the state generation the
-    filters describe is replaced)."""
-    return spark.sparkContext.broadcast([(bits.tobytes(), m) for bits, m in blooms])
-
-
-def bloom_filter_udf(bcs):
-    """pandas_udf(__h1, __h2) → true iff ANY filter in ANY of the given
-    broadcasts might contain the key. Taking a LIST of broadcast handles
-    lets a long-running stream broadcast each immutable state unit's
-    filter exactly once and compose them per batch — only genuinely new
-    units ship bytes."""
-
-    @F.pandas_udf("boolean")
-    def might(h1: pd.Series, h2: pd.Series) -> pd.Series:
-        u1 = _as_u64(h1.to_numpy(dtype=np.int64))
-        u2 = _as_u64(h2.to_numpy(dtype=np.int64))
-        res = np.zeros(len(u1), dtype=bool)
-        for bc in bcs:
-            for raw, m in bc.value:
-                todo = ~res
-                if not todo.any():
-                    return pd.Series(res)
-                res[todo] |= might_contain_vec(
-                    np.frombuffer(raw, dtype=np.uint64), m, u1[todo], u2[todo]
-                )
-        return pd.Series(res)
-
-    return might
-
-
-def bloom_multimask_udf(bcs):
-    """pandas_udf(__h1, __h2) → ``array<long>`` bitmask: filter *j*
-    (counting across the given broadcasts in order, each of which holds
-    a LIST of ``(raw_bytes, m)`` filters) sets bit ``j % 63`` of word
-    ``j // 63`` iff it might contain the key (bit 63 would be the int64
-    sign bit).
+def bloom_multimask_udf(spark: SparkSession, blooms):
+    """Broadcast the list of ``(bits, m)`` filters ``blooms`` and return
+    ``(udf, broadcast)``; the caller destroys the broadcast once the job
+    that reads it has run. The udf maps (__h1, __h2) → ``array<long>``
+    bitmask: filter *j* sets bit ``j % 63`` of word ``j // 63`` iff it
+    might contain the key (bit 63 would be the int64 sign bit).
 
     This is the DISTRIBUTED unit probe: an aggregation of ``bit_or`` per
     word over ONE scan of a batch's band hashes tells the driver *which
     state units* have a possible hit without a single band hash leaving
     the executors, and probe cost does not grow with the number of state
     sidecars."""
-    n = sum(len(bc.value) for bc in bcs)
-    words = max((n + 62) // 63, 1)
+    bc = spark.sparkContext.broadcast([(bits.tobytes(), m) for bits, m in blooms])
+    words = max((len(blooms) + 62) // 63, 1)
 
     @F.pandas_udf("array<long>")
     def mask(h1: pd.Series, h2: pd.Series) -> pd.Series:
         u1 = _as_u64(h1.to_numpy(dtype=np.int64))
         u2 = _as_u64(h2.to_numpy(dtype=np.int64))
         out = np.zeros((words, len(u1)), dtype=np.int64)
-        i = 0
-        for bc in bcs:
-            for raw, m in bc.value:
-                hit = might_contain_vec(
-                    np.frombuffer(raw, dtype=np.uint64), m, u1, u2
-                )
-                out[i // 63] |= hit.astype(np.int64) << np.int64(i % 63)
-                i += 1
+        for i, (raw, m) in enumerate(bc.value):
+            hit = might_contain_vec(np.frombuffer(raw, dtype=np.uint64), m, u1, u2)
+            out[i // 63] |= hit.astype(np.int64) << np.int64(i % 63)
         return pd.Series(list(out.T))
 
-    return mask
+    return mask, bc
 
 
 def sidecar_bytes(unit_dir: str):

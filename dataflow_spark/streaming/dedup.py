@@ -30,42 +30,35 @@ accrete unbounded state; retention is the operator's explicit
 semantics-relaxing knob (a duplicate older than the horizon can resurface).
 
 Bounded per-batch state READ (not just bounded file count): compaction
-lays the keep-set's bands out in ``n_buckets`` band-hash buckets
+lays the keep-set's bands out in ``N_BUCKETS`` band-hash buckets
 (``__bkt=N/`` partition dirs) and every state unit — bucket dir or
 uncompacted per-batch dir — carries a Bloom-filter sidecar of its band
-values (``streaming.bloom``). A micro-batch first prefilters its own
-bands through the union of unit Blooms (one broadcast, one codegen'd
-hash + vectorized probe), then probes each unit's Bloom with the
-surviving candidate hashes and reads ONLY units with a possible hit.
-Mostly-new data ⇒ candidates ≈ real duplicates + ~0.07% false positives
-⇒ per-batch state bytes read stay ~flat while the keep-set grows without
-bound. Blooms have no false negatives, and an exact anti-join over the
-units actually read makes the final call — pruning can never change the
-keep-set. A unit whose sidecar is missing or unreadable is read as a
-possible hit, so a lost sidecar costs bytes read, never exactness.
-``last_state_read`` records units/bytes read per batch (the quantity the
-scale test asserts flat).
+values (``streaming.bloom``). Every micro-batch takes one probe path:
 
-Bounded filter METADATA as well (not just bounded reads): below
-``PREFILTER_BROADCAST_MAX_BYTES`` (64 MiB) of total sidecars, the
-batch-side prefilter is a union-of-Blooms broadcast — broadcast PER IMMUTABLE UNIT,
-created when a unit first commits and destroyed when compaction replaces
-it, so a micro-batch ships only the previous batch's new filter and
-nothing accretes over the stream's life. Past the cap the prefilter
-switches to the sharded DISTRIBUTED probe: per-generation broadcasts are
-dropped, the only thing ever collected is the batch's distinct BUCKET
-IDS (≤ the manifest's bucket count — a handful of ints, independent of
-both batch and state size), and the per-unit hit/skip decision is an
-executor-side ``bit_or`` aggregation of a Bloom-bitmask column
-(``bloom_multimask_udf``) — chunked so transient broadcast bytes stay under
-the cap and destroyed right after each chunk's single job. No band hash
-ever reaches the driver in either mode; compaction buckets none of the
-batch's bands hash into are never loaded at all, and driver Bloom memory
-is LRU-capped (``BLOOM_CACHE_MAX_BYTES``, 256 MiB). Both caps are
-module constants, so the prefilter mode follows from the state's size
-alone. The remaining unbounded quantity is sidecar bytes ON DISK (~2
-B/committed band — 2 TB at 10^12 bands, cheap storage); the event-time
-retention horizon stays the knob that bounds even that.
+1. persist the batch's band hashes;
+2. skip the compaction buckets none of the batch's bands hash into — the
+   only per-batch collect is the set of distinct bucket ids (≤ the
+   manifest's bucket count), so skipped buckets' sidecars are never
+   loaded;
+3. decide which of the remaining units have a possible hit with ONE
+   executor-side scan: a ``bit_or`` aggregation of a Bloom-bitmask column
+   (``bloom_multimask_udf``), chunked so each chunk's transient broadcast
+   stays under ``PROBE_BROADCAST_MAX_BYTES`` (64 MiB) and destroyed right
+   after its job;
+4. exact-join the batch's bands against ONLY the hit units.
+
+No band hash ever reaches the driver. Mostly-new data ⇒ hits ≈ real
+duplicates + ~0.07% false positives ⇒ per-batch state bytes read stay
+~flat while the keep-set grows without bound. Blooms have no false
+negatives and the exact join makes the final call, so pruning can never
+change the keep-set. A unit whose sidecar is missing or unreadable is
+read as a possible hit, so a lost sidecar costs bytes read, never
+exactness. Driver Bloom memory is LRU-capped (``BLOOM_CACHE_MAX_BYTES``,
+256 MiB). ``last_state_read`` records units/bytes read per batch (the
+quantity the scale test asserts flat). The remaining unbounded quantity
+is sidecar bytes ON DISK (~2 B/committed band — 2 TB at 10^12 bands,
+cheap storage); the event-time retention horizon stays the knob that
+bounds even that.
 """
 
 from __future__ import annotations
@@ -85,28 +78,26 @@ from dataflow_spark.operators.dedup import (
 from dataflow_spark.streaming.bloom import (
     BloomCache,
     band_hash_cols,
-    bloom_filter_udf,
     bloom_multimask_udf,
     build_bloom,
     dir_parquet_bytes,
-    make_bloom_broadcast,
     save_bloom,
     sidecar_bytes,
 )
 from dataflow_spark.streaming.sink import append_commit, read_commit_log
 
 
-# Past this many bytes of Bloom sidecars, the batch-side prefilter
-# switches from one union broadcast to the sharded distributed probe —
-# broadcast filter bytes per batch drop to ZERO and compaction buckets the
-# batch's bands don't hash into are never even loaded. It also caps the
-# transient broadcast bytes of each over-cap probe chunk. Read at call
-# time, so tests reach the sharded probe by lowering it.
-PREFILTER_BROADCAST_MAX_BYTES = 64 << 20
+# cap on one probe chunk's transient broadcast of unit filters (read at
+# call time)
+PROBE_BROADCAST_MAX_BYTES = 64 << 20
 # LRU cap on driver-side Bloom sidecar memory (read at construction)
 BLOOM_CACHE_MAX_BYTES = 256 << 20
 
-# over-cap probe chunk width: 16 mask words → up to 1008 unit filters
+# compaction band-hash bucket count; each compaction records the count
+# it wrote in its manifest, and the shard skip reads it from there
+N_BUCKETS = 16
+
+# probe chunk width: 16 mask words → up to 1008 unit filters
 # decided per single scan of the batch (the bound guards the width of the
 # per-word bit_or aggregation expression, not correctness)
 _PROBE_MAX_UNITS = 63 * 16
@@ -150,7 +141,6 @@ class StreamingFirstWinsDedup:
         seed: int = 1,
         ts_col: str | None = None,
         compact_every: int | None = 32,
-        n_buckets: int = 16,
     ):
         self.state_dir = state_dir
         self.order_col = order_col
@@ -161,10 +151,7 @@ class StreamingFirstWinsDedup:
         self.seed = seed
         self.ts_col = ts_col
         self.compact_every = compact_every
-        self.n_buckets = n_buckets
         self._bloom_cache = BloomCache(BLOOM_CACHE_MAX_BYTES)
-        self._unit_bcs: dict = {}  # unit dir -> (Broadcast, nbytes)
-        self._gen_bytes = 0  # live broadcast bytes across all unit filters
         self._batch_persists: list = []  # per-batch persisted DFs to release
         self._committed_cache: set[int] | None = None
         self._commits_stat: tuple[int, int] | None = None
@@ -266,120 +253,43 @@ class StreamingFirstWinsDedup:
             return int(base.split("=", 1)[1])
         return None
 
-    def _drop_generation(self) -> None:
-        for path in list(self._unit_bcs):
-            self._destroy_unit_bc(path)
-
-    def _destroy_unit_bc(self, path: str) -> None:
-        bc, nbytes = self._unit_bcs.pop(path)
-        self._gen_bytes -= nbytes
-        try:
-            bc.destroy()
-        except Exception:  # noqa: BLE001 - already-stopped context
-            pass
-
-    def _generation_udf(self, spark: SparkSession, units: list[str]):
-        """(udf, sidecar_bytes_loaded) — ONE broadcast per immutable state
-        UNIT, created when the unit first appears and destroyed when a
-        compaction replaces it. A micro-batch therefore ships only the
-        previous batch's new filter; nothing accretes across the stream's
-        life (the r4 leak: a fresh union broadcast per batch, never
-        unpersisted). Returns (None, loaded) when a sidecar turns out
-        unreadable (caller falls back to the sharded probe)."""
-        current = set(units)
-        for path in [p for p in self._unit_bcs if p not in current]:
-            self._destroy_unit_bc(path)
-        loaded = 0
-        for u in units:
-            if u not in self._unit_bcs:
-                val, got = self._bloom_cache.get(u)
-                loaded += got
-                if val is None:
-                    return None, loaded
-                self._unit_bcs[u] = (
-                    make_bloom_broadcast(spark, [val]),
-                    val[0].nbytes,
-                )
-                self._gen_bytes += val[0].nbytes
-        return bloom_filter_udf([self._unit_bcs[u][0] for u in units]), loaded
-
     def _collisions_with_state(self, spark: SparkSession, bands: DataFrame):
         """ids of batch rows whose bands collide with committed state,
         reading as few state units as the Bloom sidecars allow. Returns a
         DataFrame[id] or None (no state / no possible collision); always
         sets ``last_state_read``.
 
-        Two prefilter modes, chosen by total sidecar bytes:
-
-        * ``broadcast`` (small state) — union-of-Blooms broadcast probe on
-          the executors shrinks the batch to candidates before anything is
-          collected. The broadcast is per-GENERATION (see
-          ``_generation_udf``), not per-batch.
-        * ``driver`` (state past ``PREFILTER_BROADCAST_MAX_BYTES``, or a
-          unit with a missing or unreadable sidecar) — no standing
-          broadcast at all: per-generation filters are dropped and the
-          whole batch band table becomes the probe source; a sidecar-less
-          unit is read as a hit.
-
-        In BOTH modes the per-unit hit/skip decision then runs on the
-        executors (``_probe_units``): the driver's role is unit
-        selection — it collects the batch's distinct bucket ids (≤ the
-        manifest's bucket count) for the shard skip and two longs per
-        probe chunk, never a band hash. Compaction buckets none of the
-        batch's bands hash into are never loaded from disk, per-batch
-        standing broadcast bytes in driver mode are ZERO (chunk
-        broadcasts are transient, ≤ the cap, destroyed after one job),
-        and sidecar reads track the batch's bucket fan-out, not the
-        keep-set.
+        The driver's role is unit selection: it collects the batch's
+        distinct bucket ids (≤ the manifest's bucket count) for the shard
+        skip and one row per probe chunk, never a band hash. The per-unit
+        hit/skip decision runs on the executors (``_probe_units``), and
+        sidecar reads track the batch's bucket fan-out, not the keep-set.
         """
         units = self._state_units()
         self._bloom_cache.retain(units)
         read = {
             "units_total": len(units), "units_read": 0, "bytes_read": 0,
-            "candidates": 0, "prefilter_mode": None,
-            "prefilter_broadcast_bytes": 0, "sidecar_bytes_loaded": 0,
+            "candidates": 0, "sidecar_bytes_loaded": 0,
             "probe_broadcast_peak_bytes": 0,
         }
         if not units:
             self.last_state_read = read
             return None
-        sizes = [sidecar_bytes(u) for u in units]
-        bands_h = bands.select(
-            "id",
-            "band",
-            *band_hash_cols("band"),
-            F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
-        )
-        might = None
-        if None not in sizes and sum(sizes) <= PREFILTER_BROADCAST_MAX_BYTES:
-            might, read["sidecar_bytes_loaded"] = self._generation_udf(spark, units)
-        if might is not None:
-            # 1a. broadcast prefilter: mostly-new data shrinks to real dups
-            #     + ~0.07% false positives before anything else runs
-            probe_src = bands_h.filter(
-                might(F.col("__h1"), F.col("__h2"))
-            ).persist()
-            self._batch_persists.append(probe_src)
-            reuse_gen = True
-            read.update(
-                prefilter_mode="broadcast",
-                prefilter_broadcast_bytes=self._gen_bytes,
+        probe_src = self._persist(
+            bands.select(
+                "id",
+                "band",
+                *band_hash_cols("band"),
+                F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
             )
-        else:
-            # 1b. sharded distributed probe: no standing broadcast; the
-            #     whole batch band table is the probe source and the
-            #     per-unit decision runs on the executors
-            self._drop_generation()  # release executor copies of old filters
-            probe_src = self._persist(bands_h)
-            reuse_gen = False
-            read.update(prefilter_mode="driver")
+        )
 
-        # 2. shard skip: the ONLY per-batch collect is the set of distinct
+        # 1. shard skip: the ONLY per-batch collect is the set of distinct
         #    bucket ids — ≤ the manifest's bucket count rows, independent
         #    of batch and state size. __hx is the RAW bucket hash; the
         #    bucket index is taken mod the count the compaction manifest
         #    RECORDS (the count the __bkt= dirs were written with), not
-        #    self.n_buckets, which may differ after a restart.
+        #    N_BUCKETS, which may differ after a restart.
         cand_units = units
         if any(self._unit_bucket(u) is not None for u in units):
             n_buckets = self._compaction()["n_buckets"]
@@ -395,10 +305,8 @@ class StreamingFirstWinsDedup:
                 u for u in units if self._unit_bucket(u) in batch_buckets | {None}
             ]
 
-        # 3. distributed Bloom-bitmask probe → units to read
-        hit_units, candidates = self._probe_units(
-            spark, probe_src, cand_units, read, reuse_gen
-        )
+        # 2. distributed Bloom-bitmask probe → units to read
+        hit_units, candidates = self._probe_units(spark, probe_src, cand_units, read)
         read.update(
             units_read=len(hit_units),
             bytes_read=sum(dir_parquet_bytes(u) for u in hit_units),
@@ -408,7 +316,7 @@ class StreamingFirstWinsDedup:
         if not hit_units:
             return None
 
-        # 4. exact join of the candidates against ONLY the hit units —
+        # 3. exact join of the batch's bands against ONLY the hit units —
         #    Blooms never have false negatives, so skipped units provably
         #    contain none of this batch's bands and the result is identical
         #    to the full-state join.
@@ -425,27 +333,21 @@ class StreamingFirstWinsDedup:
         probe_df: DataFrame,
         units: list[str],
         read: dict,
-        reuse_gen: bool,
     ) -> tuple[list[str], int]:
         """Which of ``units`` might contain any of ``probe_df``'s band
         hashes — decided ENTIRELY on the executors: each probe chunk runs
         one aggregation job computing per-word ``bit_or`` of a multi-word
         Bloom bitmask (``bloom_multimask_udf``) plus a candidate-row
         count, so the driver receives ≤ ``units/63 + 1`` longs per chunk
-        and never a band hash (the r5 VERDICT over-cap fix: the old
-        driver mode collected the batch's full distinct band set — ~5M
-        Rows at a 1M-row trigger).
+        and never a band hash.
 
         Chunks are bounded by ``_PROBE_MAX_UNITS`` filters (the agg-
         expression width guard — 16 mask words) AND
-        ``PREFILTER_BROADCAST_MAX_BYTES`` of transient broadcast, so
-        probe cost is ONE scan of the (in-memory) persisted batch per
-        ~1000 sidecars rather than per 63 (r6 VERDICT ask #5); in
-        ``reuse_gen`` mode (broadcast prefilter) the per-generation unit
-        broadcasts are composed instead, shipping zero new bytes. Chunk
-        broadcasts are destroyed right after their job — nothing accretes.
-        Units with a missing/unreadable sidecar are conservatively treated
-        as hits (exactness over pruning). Returns
+        ``PROBE_BROADCAST_MAX_BYTES`` of transient broadcast, so probe
+        cost is ONE scan of the (in-memory) persisted batch per ~1000
+        sidecars. Each chunk's broadcast is destroyed right after its job
+        — nothing accretes. Units with a missing/unreadable sidecar are
+        conservatively treated as hits (exactness over pruning). Returns
         ``(hit_units, candidate_row_count)`` where the count may
         double-count a row hitting units in different chunks (telemetry,
         not semantics)."""
@@ -464,7 +366,7 @@ class StreamingFirstWinsDedup:
         for u, sz in probeable:
             if cur and (
                 len(cur) >= _PROBE_MAX_UNITS
-                or cur_bytes + sz > PREFILTER_BROADCAST_MAX_BYTES
+                or cur_bytes + sz > PROBE_BROADCAST_MAX_BYTES
             ):
                 chunks.append(cur)
                 cur, cur_bytes = [], 0
@@ -473,29 +375,22 @@ class StreamingFirstWinsDedup:
         if cur:
             chunks.append(cur)
         for chunk in chunks:
-            tmp_bc = None
-            if reuse_gen:
-                bcs = [self._unit_bcs[u][0] for u in chunk]
-            else:
-                vals, kept = [], []
-                for u in chunk:
-                    val, got = self._bloom_cache.get(u)
-                    read["sidecar_bytes_loaded"] += got
-                    if val is None:
-                        hit_units.append(u)  # unreadable sidecar: must read
-                    else:
-                        vals.append(val)
-                        kept.append(u)
-                if not kept:
-                    continue
-                chunk = kept
-                tmp_bc = make_bloom_broadcast(spark, vals)
-                read["probe_broadcast_peak_bytes"] = max(
-                    read["probe_broadcast_peak_bytes"],
-                    sum(v[0].nbytes for v in vals),
-                )
-                bcs = [tmp_bc]
-            n_words = (len(chunk) + 62) // 63
+            vals, kept = [], []
+            for u in chunk:
+                val, got = self._bloom_cache.get(u)
+                read["sidecar_bytes_loaded"] += got
+                if val is None:
+                    hit_units.append(u)  # unreadable sidecar: must read
+                else:
+                    vals.append(val)
+                    kept.append(u)
+            if not kept:
+                continue
+            read["probe_broadcast_peak_bytes"] = max(
+                read["probe_broadcast_peak_bytes"],
+                sum(v[0].nbytes for v in vals),
+            )
+            n_words = (len(kept) + 62) // 63
             aggs = [
                 F.bit_or(F.element_at("__mk", j + 1)).alias(f"b{j}")
                 for j in range(n_words)
@@ -505,21 +400,19 @@ class StreamingFirstWinsDedup:
                     F.exists("__mk", lambda x: x != F.lit(0)).cast("long")
                 ).alias("cand")
             )
-            row = (
-                probe_df.select(
-                    bloom_multimask_udf(bcs)(
-                        F.col("__h1"), F.col("__h2")
-                    ).alias("__mk")
+            mask, bc = bloom_multimask_udf(spark, vals)
+            try:
+                row = (
+                    probe_df.select(mask(F.col("__h1"), F.col("__h2")).alias("__mk"))
+                    .agg(*aggs)
+                    .collect()[0]
                 )
-                .agg(*aggs)
-                .collect()[0]
-            )
-            if tmp_bc is not None:
+            finally:
                 try:
-                    tmp_bc.destroy()
+                    bc.destroy()
                 except Exception:  # noqa: BLE001 - already-stopped context
                     pass
-            for i, u in enumerate(chunk):
+            for i, u in enumerate(kept):
                 if ((row[f"b{i // 63}"] or 0) >> (i % 63)) & 1:
                     hit_units.append(u)
             candidates += row["cand"] or 0
@@ -652,15 +545,15 @@ class StreamingFirstWinsDedup:
             )
         # write the merged state under a FRESH name, then flip the manifest —
         # a crash before the flip leaves the old state fully reachable.
-        # Layout: n_buckets band-hash partition dirs, each with a Bloom
+        # Layout: N_BUCKETS band-hash partition dirs, each with a Bloom
         # sidecar, so the per-batch read path can prune at bucket grain.
         new_name = f"compact-{upto}-{prev['seq'] + 1}"
         new_dir = os.path.join(self.state_dir, "bands", new_name)
         (
             state.withColumn(
-                "__bkt", F.pmod(F.xxhash64("band", F.lit("dfs-bkt")), F.lit(self.n_buckets))
+                "__bkt", F.pmod(F.xxhash64("band", F.lit("dfs-bkt")), F.lit(N_BUCKETS))
             )
-            .repartition(self.n_buckets, "__bkt")
+            .repartition(N_BUCKETS, "__bkt")
             .write.partitionBy("__bkt")
             .mode("overwrite")
             .parquet(new_dir)
@@ -671,20 +564,24 @@ class StreamingFirstWinsDedup:
             sdf = spark.read.parquet(sub)
             bits, m = build_bloom(sdf, max(sdf.count(), 1))
             save_bloom(sub, bits, m)
-        with open(self._manifest, "w") as f:
-            # n_buckets is pinned IN the manifest: the __bkt= dirs just
-            # written are only meaningful under this count, and a restart
-            # with a different self.n_buckets must shard-skip against the
-            # recorded value, not its own
+        # the flip itself is atomic (tmp + rename): a crash mid-write
+        # leaves the previous manifest whole, never a truncated one that
+        # every later batch would fail to parse. n_buckets is pinned IN
+        # the manifest: the __bkt= dirs just written are only meaningful
+        # under this count, and a restart under a different N_BUCKETS
+        # must shard-skip against the recorded value
+        tmp = self._manifest + ".tmp"
+        with open(tmp, "w") as f:
             json.dump(
                 {
                     "upto": upto,
                     "dir": new_name,
                     "seq": prev["seq"] + 1,
-                    "n_buckets": self.n_buckets,
+                    "n_buckets": N_BUCKETS,
                 },
                 f,
             )
+        os.replace(tmp, self._manifest)
         # old dirs are now unreachable via the manifest — reclaim them
         for b in committed:
             if b <= upto:

@@ -112,41 +112,31 @@ def test_embedding_cosine(spark):
     assert kept == [0, 2]
 
 
-def test_component_path_equals_fast_path(spark, corpus_pdf):
-    """Forcing the label-prop component path (threshold=0) must give the
+def test_component_path_equals_fast_path(spark, corpus_pdf, monkeypatch):
+    """Forcing the label-prop component path (cap 0) must give the
     same keep-set as the single-task fast path — and both must equal the
     sequential oracle."""
-    from dataflow_spark.operators.dedup import first_wins_bucket_claim, minhash_bucket_table
+    import dataflow_spark.operators.dedup as D2
     from tests import reference_kernels as RK
 
     df = spark.createDataFrame(corpus_pdf)
-    buckets = minhash_bucket_table(df, "rid")
-    fast = _kept_rids(first_wins_bucket_claim(df, "rid", buckets))
-    dist = _kept_rids(
-        first_wins_bucket_claim(df, "rid", buckets, small_graph_threshold=0)
-    )
+    buckets = D2.minhash_bucket_table(df, "rid")
+    fast = _kept_rids(D2.first_wins_bucket_claim(df, "rid", buckets))
+    monkeypatch.setattr(D2, "SMALL_GRAPH_MAX_MEMBERS", 0)
+    dist = _kept_rids(D2.first_wins_bucket_claim(df, "rid", buckets))
     assert fast == dist
     assert fast == _expected(corpus_pdf, RK.minhash_dedup_keep(corpus_pdf["text"].tolist()))
 
 
-def test_component_path_with_verify(spark):
+def test_component_path_with_verify(spark, monkeypatch):
     """Verified family (simhash) through the distributed component path."""
     a = "alpha beta gamma delta epsilon zeta eta theta " * 6
     rows = [(0, a), (1, a.replace("zeta", "zetaX")), (2, "unrelated words " * 10)]
     df = spark.createDataFrame(rows, "rid long, text string")
     import dataflow_spark.operators.dedup as D2
 
-    orig = D2.first_wins_bucket_claim
-
-    def forced(df_, id_col, buckets, **kw):
-        kw["small_graph_threshold"] = 0
-        return orig(df_, id_col, buckets, **kw)
-
-    D2.first_wins_bucket_claim = forced
-    try:
-        kept = _kept_rids(D2.dedup_simhash(df, "rid", max_hamming=6))
-    finally:
-        D2.first_wins_bucket_claim = orig
+    monkeypatch.setattr(D2, "SMALL_GRAPH_MAX_MEMBERS", 0)
+    kept = _kept_rids(D2.dedup_simhash(df, "rid", max_hamming=6))
     assert 0 in kept and 2 in kept
 
 

@@ -4,6 +4,7 @@ sequential scan; exact dedup state is watermark-scoped."""
 import numpy as np
 import os
 import pandas as pd
+import pytest
 
 from dataflow_spark.datagen import make_transcripts
 from dataflow_spark.streaming import dedup as SD
@@ -166,20 +167,21 @@ def _unique_batch(b: int, n: int = 400) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["rid", "text"])
 
 
-def test_state_read_stays_flat_as_keepset_grows(spark, tmp_path):
+def test_state_read_stays_flat_as_keepset_grows(spark, tmp_path, monkeypatch):
     """The 10^12-turn scale property: per-batch state BYTES READ must not
     grow with the committed keep-set. With bucketed compaction + Bloom
-    sidecars, a batch of new texts prefilters to ~zero candidates and
+    sidecars, a batch of new texts probes to ~zero candidates and
     reads ~no state units, while total state keeps growing; a batch of
     actual duplicates still reads (only) the colliding units and drops
     every duplicate — pruning never changes the keep-set."""
     from dataflow_spark.streaming.bloom import dir_parquet_bytes
 
+    monkeypatch.setattr(SD, "N_BUCKETS", 8)
     out: list[int] = []
     d = StreamingFirstWinsDedup(
         str(tmp_path / "state_flat"), order_col="rid",
         downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
-        compact_every=4, n_buckets=8,
+        compact_every=4,
     )
     reads, totals = [], []
     for b in range(12):
@@ -236,41 +238,27 @@ def test_compaction_retention_expires_old_state(spark, tmp_path):
 
 
 def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path, monkeypatch):
-    """Past ``PREFILTER_BROADCAST_MAX_BYTES`` the prefilter switches to the
-    sharded driver probe: per-batch broadcast filter bytes are ZERO no
-    matter how large the committed band state grows, compaction buckets
-    none of the batch's bands hash into are never loaded from disk, and
-    the keep-set is identical to the broadcast-mode instance's."""
-    kept = {"bc": [], "drv": []}
-    insts = {}
-    for mode, cap in (("bc", 1 << 30), ("drv", 0)):
-        monkeypatch.setattr(SD, "PREFILTER_BROADCAST_MAX_BYTES", cap)
-        d = StreamingFirstWinsDedup(
-            str(tmp_path / f"state_{mode}"), order_col="rid",
-            downstream=(lambda m: lambda s, b: kept[m].extend(
-                r.rid for r in s.select("rid").collect()))(mode),
-            compact_every=4, n_buckets=8,
-        )
-        insts[mode] = d
-        for b in range(8):
-            batch = _unique_batch(b)
-            if b == 6:  # one true-duplicate batch: dedup must still fire
-                batch = _unique_batch(0)
-                batch["rid"] = batch["rid"] + 500_000
-            d.process_batch(spark.createDataFrame(batch), b)
-            if mode == "drv":
-                r = d.last_state_read
-                if b > 0:
-                    assert r["prefilter_mode"] == "driver"
-                assert r["prefilter_broadcast_bytes"] == 0
-        assert d._gen_bytes == 0 or mode == "bc"
-    assert sorted(kept["bc"]) == sorted(kept["drv"])
+    """The sharded probe keeps the keep-set exact across compactions and a
+    true-duplicate batch, and compaction buckets none of the batch's
+    bands hash into are never loaded from disk."""
+    monkeypatch.setattr(SD, "N_BUCKETS", 8)
+    kept: list[int] = []
+    d = StreamingFirstWinsDedup(
+        str(tmp_path / "state_drv"), order_col="rid",
+        downstream=lambda s, b: kept.extend(r.rid for r in s.select("rid").collect()),
+        compact_every=4,
+    )
+    for b in range(8):
+        batch = _unique_batch(b)
+        if b == 6:  # one true-duplicate batch: dedup must still fire
+            batch = _unique_batch(0)
+            batch["rid"] = batch["rid"] + 500_000
+        d.process_batch(spark.createDataFrame(batch), b)
     # duplicates actually dropped (batch 6 contributed nothing)
-    assert len(kept["drv"]) == 7 * 400
+    assert len(kept) == 7 * 400
 
     # bucket sharding: a single-row batch hashes into few of the 8
     # compaction buckets — most bucket sidecars must not even be loaded
-    d = insts["drv"]
     d._bloom_cache._entries.clear()
     d._bloom_cache._bytes = 0
     one = pd.DataFrame({"rid": [999_999], "text": [_unique_batch(0)["text"].iloc[0]]})
@@ -282,25 +270,24 @@ def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path, monkeypatch):
         for p in _g.glob(os.path.join(u, "_bloom.npz"))
     )
     assert d.last_state_read["sidecar_bytes_loaded"] < total_sidecar
-    assert len(kept["drv"]) == 7 * 400  # the duplicate row was dropped
+    assert len(kept) == 7 * 400  # the duplicate row was dropped
 
 
 def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
-    """r5 VERDICT ask #2: past ``PREFILTER_BROADCAST_MAX_BYTES`` the
-    driver's role is UNIT SELECTION — it must never collect the batch's
-    band hashes (the old over-cap path collected the full distinct band
-    set: ~5M Rows at a 1M-row trigger). With the distributed bitmask
-    probe, every collect during an over-cap batch is driver-sized: bucket
-    ids (≤ n_buckets rows), one 2-long row per probe chunk, Bloom-build
-    partials (≤ #partitions rows of filter words, sized by the filter,
-    not the batch). Semantics: the known-duplicate half of the big batch
+    """r5 VERDICT ask #2: the driver's role is UNIT SELECTION — it must
+    never collect the batch's band hashes (the old over-cap path collected
+    the full distinct band set: ~5M Rows at a 1M-row trigger). With the
+    distributed bitmask probe, every collect during a batch is
+    driver-sized: bucket ids (≤ N_BUCKETS rows), one 2-long row per probe
+    chunk, Bloom-build partials (≤ #partitions rows of filter words, sized
+    by the filter, not the batch). Semantics: the known-duplicate half of the big batch
     still drops exactly."""
     out: list[int] = []
-    monkeypatch.setattr(SD, "PREFILTER_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(SD, "N_BUCKETS", 8)
     d = StreamingFirstWinsDedup(
         str(tmp_path / "state_oc"), order_col="rid",
         downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
-        compact_every=4, n_buckets=8,
+        compact_every=4,
     )
     for b in range(6):
         d.process_batch(spark.createDataFrame(_unique_batch(b)), b)
@@ -335,8 +322,6 @@ def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
     finally:
         _DF.collect = orig
 
-    assert d.last_state_read["prefilter_mode"] == "driver"
-    assert d.last_state_read["prefilter_broadcast_bytes"] == 0
     # 6400 distinct band rows in the batch — a band-hash collect would be
     # thousands of rows; unit selection needs only driver-sized results
     # (the one large-ish collect is the test's own downstream sink)
@@ -346,18 +331,19 @@ def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
     assert len(out) == n_before + 800
 
 
-def test_restart_with_different_n_buckets_keeps_exactness(spark, tmp_path):
+def test_restart_with_different_n_buckets_keeps_exactness(spark, tmp_path, monkeypatch):
     """The compaction's ``__bkt=`` dirs are only meaningful under the
-    bucket count they were WRITTEN with. A restart with a different
-    ``n_buckets`` must shard-skip against the count recorded in
+    bucket count they were WRITTEN with. A restart under a different
+    ``N_BUCKETS`` must shard-skip against the count recorded in
     ``_compaction.json`` — computing batch bucket ids with the new
     instance's count would silently skip units that do contain colliding
     bands and leak duplicates into the keep-set (r5 ADVICE, medium)."""
     state = str(tmp_path / "state_nb")
     out: list[int] = []
     sink = lambda s, b: out.extend(r.rid for r in s.select("rid").collect())  # noqa: E731
+    monkeypatch.setattr(SD, "N_BUCKETS", 16)
     d16 = StreamingFirstWinsDedup(
-        state, order_col="rid", downstream=sink, compact_every=None, n_buckets=16,
+        state, order_col="rid", downstream=sink, compact_every=None,
     )
     for b in range(4):
         d16.process_batch(spark.createDataFrame(_unique_batch(b)), b)
@@ -366,11 +352,12 @@ def test_restart_with_different_n_buckets_keeps_exactness(spark, tmp_path):
     n_committed = len(out)
     assert n_committed == 4 * 400
 
-    # restart with n_buckets=5: under mod-5 batch bucket ids, compaction
+    # restart with N_BUCKETS=5: under mod-5 batch bucket ids, compaction
     # dirs __bkt=5..15 would be skipped by the buggy skip test — the
     # duplicate batch's keepers live all across the 16 buckets
+    monkeypatch.setattr(SD, "N_BUCKETS", 5)
     d5 = StreamingFirstWinsDedup(
-        state, order_col="rid", downstream=sink, compact_every=None, n_buckets=5,
+        state, order_col="rid", downstream=sink, compact_every=None,
     )
     dup = _unique_batch(0)
     dup["rid"] = dup["rid"] + 2_000_000
@@ -400,7 +387,6 @@ def test_missing_sidecar_still_gives_exact_keepset(spark, tmp_path):
     dup["rid"] = dup["rid"] + 4_000_000
     d.process_batch(spark.createDataFrame(dup), 3)
     assert len(out) == n_committed  # every duplicate dropped
-    assert d.last_state_read["prefilter_mode"] == "driver"
     assert d.last_state_read["units_read"] >= 2
 
 
@@ -466,7 +452,7 @@ def test_probe_job_count_independent_of_unit_count(spark, tmp_path):
     read = {"sidecar_bytes_loaded": 0, "probe_broadcast_peak_bytes": 0}
     _DF.collect = spy
     try:
-        hits, cand = d._probe_units(spark, probe_src, units, read, False)
+        hits, cand = d._probe_units(spark, probe_src, units, read)
     finally:
         _DF.collect = orig
         probe_src.unpersist()
@@ -475,3 +461,41 @@ def test_probe_job_count_independent_of_unit_count(spark, tmp_path):
     assert calls[0] == 1  # a single Row of mask words + count
     assert sorted(hits) == sorted(units[5:10])
     assert cand == 5
+
+
+def test_torn_compaction_manifest_keeps_previous_state(spark, tmp_path, monkeypatch):
+    """A crash while ``compact()`` writes ``_compaction.json`` must leave
+    the previous manifest readable: rewriting it in place would leave a
+    truncated file that every later batch fails to parse."""
+    import json
+
+    out: list[int] = []
+    d = StreamingFirstWinsDedup(
+        str(tmp_path / "state_torn_manifest"), order_col="rid",
+        downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
+        compact_every=None,
+    )
+    for b in range(2):
+        d.process_batch(spark.createDataFrame(_unique_batch(b)), b)
+    d.compact(spark)
+    before = d._compaction()
+    d.process_batch(spark.createDataFrame(_unique_batch(2)), 2)
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj)[:10])  # killed partway through the write
+        raise OSError("simulated crash mid-write")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError):
+            d.compact(spark)
+
+    assert d._compaction() == before
+    n_committed = len(out)
+    assert n_committed == 3 * 400
+    # duplicates of compacted AND uncompacted keepers drop; new rows stay
+    dup = pd.concat([_unique_batch(0), _unique_batch(2), _unique_batch(3)],
+                    ignore_index=True)
+    dup["rid"] = np.arange(len(dup), dtype="int64") + 6_000_000
+    d.process_batch(spark.createDataFrame(dup), 3)
+    assert len(out) == n_committed + 400
