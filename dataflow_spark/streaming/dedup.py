@@ -35,7 +35,7 @@ lays the keep-set's bands out in ``N_BUCKETS`` band-hash buckets
 uncompacted per-batch dir — carries a Bloom-filter sidecar of its band
 values (``streaming.bloom``). Every micro-batch takes one probe path:
 
-1. persist the batch's band hashes;
+1. hash the batch's persisted band table;
 2. skip the compaction buckets none of the batch's bands hash into — the
    only per-batch collect is the set of distinct bucket ids (≤ the
    manifest's bucket count), so skipped buckets' sidecars are never
@@ -43,9 +43,9 @@ values (``streaming.bloom``). Every micro-batch takes one probe path:
 3. decide which of the remaining units have a possible hit with ONE
    executor-side scan: a ``bit_or`` aggregation of a Bloom-bitmask column
    (``bloom_multimask_udf``), chunked so each chunk's transient broadcast
-   stays under ``PROBE_BROADCAST_MAX_BYTES`` (64 MiB) and destroyed right
-   after its job;
-4. exact-join the batch's bands against ONLY the hit units.
+   stays under ``PROBE_BROADCAST_MAX_BYTES`` (64 MiB); the same scan
+   caches the candidate rows (bands some filter might contain);
+4. exact-join ONLY the candidate rows against ONLY the hit units.
 
 No band hash ever reaches the driver. Mostly-new data ⇒ hits ≈ real
 duplicates + ~0.07% false positives ⇒ per-batch state bytes read stay
@@ -67,6 +67,7 @@ import glob as _glob
 import json
 import os
 import shutil
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -152,7 +153,7 @@ class StreamingFirstWinsDedup:
         self.ts_col = ts_col
         self.compact_every = compact_every
         self._bloom_cache = BloomCache(BLOOM_CACHE_MAX_BYTES)
-        self._batch_persists: list = []  # per-batch persisted DFs to release
+        self._batch_release: list = []  # per-batch unpersist/destroy calls
         self._committed_cache: set[int] | None = None
         self._commits_stat: tuple[int, int] | None = None
         # per-batch read telemetry: {"units_total", "units_read",
@@ -275,13 +276,13 @@ class StreamingFirstWinsDedup:
         if not units:
             self.last_state_read = read
             return None
-        probe_src = self._persist(
-            bands.select(
-                "id",
-                "band",
-                *band_hash_cols("band"),
-                F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
-            )
+        # not persisted: the hashes are cheap JVM projections of the
+        # persisted band table, and the probe caches the candidate rows
+        probe_src = bands.select(
+            "id",
+            "band",
+            *band_hash_cols("band"),
+            F.xxhash64("band", F.lit("dfs-bkt")).alias("__hx"),
         )
 
         # 1. shard skip: the ONLY per-batch collect is the set of distinct
@@ -305,24 +306,24 @@ class StreamingFirstWinsDedup:
                 u for u in units if self._unit_bucket(u) in batch_buckets | {None}
             ]
 
-        # 2. distributed Bloom-bitmask probe → units to read
-        hit_units, candidates = self._probe_units(spark, probe_src, cand_units, read)
+        # 2. distributed Bloom-bitmask probe → units to read, and the
+        #    candidate rows the exact join must read
+        hit_units, cand_rows = self._probe_units(spark, probe_src, cand_units, read)
         read.update(
             units_read=len(hit_units),
             bytes_read=sum(dir_parquet_bytes(u) for u in hit_units),
-            candidates=candidates,
         )
         self.last_state_read = read
         if not hit_units:
             return None
 
-        # 3. exact join of the batch's bands against ONLY the hit units —
-        #    Blooms never have false negatives, so skipped units provably
-        #    contain none of this batch's bands and the result is identical
-        #    to the full-state join.
+        # 3. exact join of the candidate rows against ONLY the hit units —
+        #    Blooms never have false negatives, so a row outside the
+        #    candidates and a unit outside the hits share no band, and the
+        #    result is identical to the full-state join.
         state = self._read_units(spark, hit_units)
         return (
-            probe_src.join(state.select("band").distinct().hint("shuffle_hash"), "band")
+            cand_rows.join(state.select("band").distinct().hint("shuffle_hash"), "band")
             .select("id")
             .distinct()
         )
@@ -333,31 +334,38 @@ class StreamingFirstWinsDedup:
         probe_df: DataFrame,
         units: list[str],
         read: dict,
-    ) -> tuple[list[str], int]:
+    ) -> tuple[list[str], DataFrame]:
         """Which of ``units`` might contain any of ``probe_df``'s band
         hashes — decided ENTIRELY on the executors: each probe chunk runs
-        one aggregation job computing per-word ``bit_or`` of a multi-word
-        Bloom bitmask (``bloom_multimask_udf``) plus a candidate-row
-        count, so the driver receives ≤ ``units/63 + 1`` longs per chunk
-        and never a band hash.
+        one job that caches the rows of ``probe_df`` whose multi-word
+        Bloom bitmask (``bloom_multimask_udf``) is non-zero and
+        aggregates a per-word ``bit_or`` plus a count over them, so the
+        driver receives ≤ ``units/63 + 1`` longs per chunk and never a
+        band hash.
 
         Chunks are bounded by ``_PROBE_MAX_UNITS`` filters (the agg-
         expression width guard — 16 mask words) AND
         ``PROBE_BROADCAST_MAX_BYTES`` of transient broadcast, so probe
         cost is ONE scan of the (in-memory) persisted batch per ~1000
-        sidecars. Each chunk's broadcast is destroyed right after its job
-        — nothing accretes. Units with a missing/unreadable sidecar are
-        conservatively treated as hits (exactness over pruning). Returns
-        ``(hit_units, candidate_row_count)`` where the count may
-        double-count a row hitting units in different chunks (telemetry,
-        not semantics)."""
+        sidecars. Executor copies of a chunk's broadcast are dropped right
+        after its job; the driver keeps it until the batch ends, so a lost
+        cached candidate block can still be recomputed. Units with a
+        missing/unreadable sidecar are conservatively treated as hits
+        (exactness over pruning).
+
+        Returns ``(hit_units, cand_rows)``: ``cand_rows`` are the rows the
+        exact join must read — the union of the chunks' candidates, or all
+        of ``probe_df`` when a unit is read unprobed. Adds the candidate
+        count to ``read["candidates"]``; it may double-count a row hitting
+        units in different chunks (telemetry, not semantics)."""
         hit_units: list[str] = []
-        candidates = 0
+        unprobed = False
         probeable: list[tuple[str, int]] = []
         for u in units:
             sz = sidecar_bytes(u)
             if sz is None:
                 hit_units.append(u)  # sidecar-less: must read
+                unprobed = True
             else:
                 probeable.append((u, sz))
         chunks: list[list[str]] = []
@@ -374,6 +382,7 @@ class StreamingFirstWinsDedup:
             cur_bytes += sz
         if cur:
             chunks.append(cur)
+        cands: list[DataFrame] = []
         for chunk in chunks:
             vals, kept = [], []
             for u in chunk:
@@ -381,6 +390,7 @@ class StreamingFirstWinsDedup:
                 read["sidecar_bytes_loaded"] += got
                 if val is None:
                     hit_units.append(u)  # unreadable sidecar: must read
+                    unprobed = True
                 else:
                     vals.append(val)
                     kept.append(u)
@@ -395,44 +405,39 @@ class StreamingFirstWinsDedup:
                 F.bit_or(F.element_at("__mk", j + 1)).alias(f"b{j}")
                 for j in range(n_words)
             ]
-            aggs.append(
-                F.sum(
-                    F.exists("__mk", lambda x: x != F.lit(0)).cast("long")
-                ).alias("cand")
-            )
+            aggs.append(F.count(F.lit(1)).alias("cand"))
             mask, bc = bloom_multimask_udf(spark, vals)
-            try:
-                row = (
-                    probe_df.select(mask(F.col("__h1"), F.col("__h2")).alias("__mk"))
-                    .agg(*aggs)
-                    .collect()[0]
-                )
-            finally:
-                try:
-                    bc.destroy()
-                except Exception:  # noqa: BLE001 - already-stopped context
-                    pass
+            self._batch_release.append(bc.destroy)
+            cand = self._persist(
+                probe_df.withColumn("__mk", mask(F.col("__h1"), F.col("__h2")))
+                .filter(F.exists("__mk", lambda x: x != F.lit(0)))
+            )
+            row = cand.agg(*aggs).collect()[0]
+            bc.unpersist()
             for i, u in enumerate(kept):
                 if ((row[f"b{i // 63}"] or 0) >> (i % 63)) & 1:
                     hit_units.append(u)
-            candidates += row["cand"] or 0
-        return hit_units, candidates
+            read["candidates"] += row["cand"]
+            cands.append(cand.drop("__mk"))
+        if unprobed or not cands:
+            return hit_units, probe_df
+        return hit_units, reduce(DataFrame.unionByName, cands)
 
     def _persist(self, df: DataFrame) -> DataFrame:
         """Per-batch cache, released at the end of ``process_batch`` —
         unlike ``localCheckpoint`` (whose blocks linger until the JVM
         garbage-collects the RDD), an explicit persist/unpersist pair
         keeps a long-running stream's block manager flat."""
-        self._batch_persists.append(df.persist())
+        self._batch_release.append(df.persist().unpersist)
         return df
 
     def _release_batch(self) -> None:
-        for d in self._batch_persists:
+        for release in self._batch_release:
             try:
-                d.unpersist()
+                release()
             except Exception:  # noqa: BLE001 - stopped context on teardown
                 pass
-        self._batch_persists.clear()
+        self._batch_release.clear()
 
     def process_batch(self, df: DataFrame, batch_id: int) -> None:
         if batch_id in self._committed():

@@ -239,9 +239,14 @@ def test_compaction_retention_expires_old_state(spark, tmp_path):
 
 def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path, monkeypatch):
     """The sharded probe keeps the keep-set exact across compactions and a
-    true-duplicate batch, and compaction buckets none of the batch's
-    bands hash into are never loaded from disk."""
+    true-duplicate batch when its units are split over several probe
+    chunks, no chunk's broadcast exceeds ``PROBE_BROADCAST_MAX_BYTES``,
+    and compaction buckets none of the batch's bands hash into are never
+    loaded from disk."""
     monkeypatch.setattr(SD, "N_BUCKETS", 8)
+    # every sidecar here is a minimum-size 8 KiB filter (≤ 2000 band keys
+    # per unit), so this cap puts at most two units in one probe chunk
+    monkeypatch.setattr(SD, "PROBE_BROADCAST_MAX_BYTES", 20_000)
     kept: list[int] = []
     d = StreamingFirstWinsDedup(
         str(tmp_path / "state_drv"), order_col="rid",
@@ -271,6 +276,10 @@ def test_sharded_prefilter_bounds_broadcast_bytes(spark, tmp_path, monkeypatch):
     )
     assert d.last_state_read["sidecar_bytes_loaded"] < total_sidecar
     assert len(kept) == 7 * 400  # the duplicate row was dropped
+    # the loaded filters went out in several chunks, each under the cap
+    peak = d.last_state_read["probe_broadcast_peak_bytes"]
+    assert 0 < peak <= SD.PROBE_BROADCAST_MAX_BYTES
+    assert peak < d.last_state_read["sidecar_bytes_loaded"]
 
 
 def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
@@ -284,6 +293,9 @@ def test_overcap_probe_never_collects_band_hashes(spark, tmp_path, monkeypatch):
     still drops exactly."""
     out: list[int] = []
     monkeypatch.setattr(SD, "N_BUCKETS", 8)
+    # one probe chunk per unit: the collect bound must hold however many
+    # chunks a batch probes
+    monkeypatch.setattr(SD, "PROBE_BROADCAST_MAX_BYTES", 0)
     d = StreamingFirstWinsDedup(
         str(tmp_path / "state_oc"), order_col="rid",
         downstream=lambda s, b: out.extend(r.rid for r in s.select("rid").collect()),
@@ -449,18 +461,20 @@ def test_probe_job_count_independent_of_unit_count(spark, tmp_path):
         calls.append(len(rows))
         return rows
 
-    read = {"sidecar_bytes_loaded": 0, "probe_broadcast_peak_bytes": 0}
+    read = {"sidecar_bytes_loaded": 0, "probe_broadcast_peak_bytes": 0, "candidates": 0}
     _DF.collect = spy
     try:
-        hits, cand = d._probe_units(spark, probe_src, units, read)
+        hits, cand_rows = d._probe_units(spark, probe_src, units, read)
+        assert cand_rows.count() == 5  # only the hitting rows go on to the join
     finally:
         _DF.collect = orig
+        d._release_batch()
         probe_src.unpersist()
 
     assert len(calls) == 1, f"expected ONE probe aggregation, saw {len(calls)}"
     assert calls[0] == 1  # a single Row of mask words + count
     assert sorted(hits) == sorted(units[5:10])
-    assert cand == 5
+    assert read["candidates"] == 5
 
 
 def test_torn_compaction_manifest_keeps_previous_state(spark, tmp_path, monkeypatch):
