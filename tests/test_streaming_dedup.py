@@ -440,9 +440,12 @@ def test_probe_job_count_independent_of_unit_count(spark, tmp_path):
     # count — at the default cap these 70 tiny sidecars are one chunk
     # (the pre-r7 code still split them 63+7 → two scans)
     d = StreamingFirstWinsDedup(str(tmp_path / "state"), order_col="rid")
-    # the batch's bands hit only units 5..9
+    # the batch's bands hit only units 5..9; three more bands hit none
     probe_src = (
-        spark.createDataFrame([(b,) for b in bands[5:10]], "band string")
+        spark.createDataFrame(
+            [(b,) for b in bands[5:10] + ["probe-miss-0", "probe-miss-1", "probe-miss-2"]],
+            "band string",
+        )
         .select(*B.band_hash_cols("band"))
         .persist()
     )
@@ -465,7 +468,7 @@ def test_probe_job_count_independent_of_unit_count(spark, tmp_path):
     _DF.collect = spy
     try:
         hits, cand_rows = d._probe_units(spark, probe_src, units, read)
-        assert cand_rows.count() == 5  # only the hitting rows go on to the join
+        assert cand_rows.count() == 5  # only the 5 hitting rows of 8 go on to the join
     finally:
         _DF.collect = orig
         d._release_batch()
