@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dataflow_spark.functions.sparkutil import is_member
+
 # irregular plurals (WordNet noun.exc subset, pinned)
 LEMMA_EXCEPTIONS: dict[str, str] = {
     "children": "child", "feet": "foot", "geese": "goose", "mice": "mouse",
@@ -125,28 +127,25 @@ def _lemma_word_col(w: Column) -> Column:
     exc = F.create_map(
         *[F.lit(x) for kv in LEMMA_EXCEPTIONS.items() for x in kv]
     )
-    # lexicon as a map literal: map_contains_key is a hash probe (an
-    # array literal + array_contains would be O(n) per candidate)
-    lex = F.create_map(
-        *[F.lit(x) for word in sorted(LEMMA_LEXICON) for x in (word, "1")]
-    )
     c_ies = F.concat(F.substring(w, 1, ln - 3), F.lit("y"))
     c_es = F.substring(w, 1, ln - 2)
     c_men = F.concat(F.substring(w, 1, ln - 3), F.lit("man"))
     c_s = F.substring(w, 1, ln - 1)
+    # lexicon probes are hashed INs (sparkutil.is_member); map_contains_key
+    # over a map literal would scan every lexicon word per candidate
     return (
         F.when(~w.rlike("^[a-z]+$"), w)
         .when(F.element_at(exc, w).isNotNull(), F.element_at(exc, w))
-        .when(w.rlike(".{2}ies$") & F.map_contains_key(lex, c_ies), c_ies)
+        .when(w.rlike(".{2}ies$") & is_member(c_ies, LEMMA_LEXICON), c_ies)
         .when(
-            w.rlike("(ches|shes|ses|xes|zes)$") & F.map_contains_key(lex, c_es),
+            w.rlike("(ches|shes|ses|xes|zes)$") & is_member(c_es, LEMMA_LEXICON),
             c_es,
         )
-        .when(w.rlike("men$") & F.map_contains_key(lex, c_men), c_men)
+        .when(w.rlike("men$") & is_member(c_men, LEMMA_LEXICON), c_men)
         .when(
             w.rlike(".{3}s$")
             & ~w.rlike("(ss|us|is)$")
-            & F.map_contains_key(lex, c_s),
+            & is_member(c_s, LEMMA_LEXICON),
             c_s,
         )
         .otherwise(w)

@@ -176,12 +176,11 @@ def _k_remove_stopwords(s: pd.Series) -> pd.Series:
 
 
 def _n_remove_stopwords(c: Column) -> Column:
-    from dataflow_spark.functions.sparkutil import is_member, member_map
+    from dataflow_spark.functions.sparkutil import is_member
 
-    sw = member_map(X.STOPWORDS)
     toks = F.filter(
         F.split(F.trim(c), r"\s+"),
-        lambda x: (x != "") & ~is_member(sw, F.lower(x)),
+        lambda x: (x != "") & ~is_member(F.lower(x), X.STOPWORDS),
     )
     return F.when(c.isNull(), F.lit(None)).otherwise(F.array_join(toks, " "))
 

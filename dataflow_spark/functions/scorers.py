@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dataflow_spark.functions import text as X
+from dataflow_spark.functions.sparkutil import bind, is_member
 
 # ------------------------------------------------------------- ngram score
 
@@ -31,7 +32,7 @@ def ngram_score_native(c: Column, n: int = 5) -> Column:
     (lowercase, ASCII punctuation stripped). 1.0 when fewer than n tokens —
     "no repetition". Reference: eval/statistics/ngram_scorer.py:38-50.
 
-    The token array is bound once via a lateral lambda (Catalyst does NOT
+    The token array is bound once (``sparkutil.bind``; Catalyst does NOT
     eliminate common subexpressions across lambda bodies — without this,
     tokenization re-runs once per gram, O(words x split)).
     """
@@ -48,9 +49,7 @@ def ngram_score_native(c: Column, n: int = 5) -> Column:
             F.size(F.array_distinct(grams)).cast("double") / F.size(grams)
         )
 
-    # evaluate toks once per row: wrap as single-element array -> transform
-    return F.element_at(F.transform(F.array(F.struct(toks_expr.alias("t"))),
-                                    lambda s: score_of(s["t"])), 1)
+    return bind(toks_expr, score_of)
 
 
 def ngram_score_kernel(s: pd.Series, n: int = 5) -> pd.Series:
@@ -155,12 +154,9 @@ def lang_id_native(c: Column) -> Column:
         F.lower,
     )
     def _hit_count(lang: str) -> Column:
-        from dataflow_spark.functions.sparkutil import is_member, member_map
-
-        arr = member_map(X.LANG_STOPWORDS[lang])
         # NB: the lambda must take exactly one arg — Spark treats two-arg
         # lambdas in higher-order functions as (element, index).
-        return F.size(F.filter(toks, lambda x: is_member(arr, x)))
+        return F.size(F.filter(toks, lambda x: is_member(x, X.LANG_STOPWORDS[lang])))
 
     hits = {lang: _hit_count(lang) for lang in ("en", "de", "fr", "es")}
     c_en, c_de, c_fr, c_es = hits["en"], hits["de"], hits["fr"], hits["es"]
@@ -216,18 +212,14 @@ def quality_score_native(c: Column) -> Column:
     q = 0.3*min(1, words/50) + 0.3*min(1, 5*stop_ratio)
       + 0.2*(1 - caps_ratio) + 0.2*max(0, 1 - 10*symbol_ratio)
 
-    The token array is bound once via the single-element-array/transform
-    device (see ngram_score_native): higher-order lambdas are evaluated
+    The token array is bound once (``sparkutil.bind``): higher-order lambdas are evaluated
     interpreted and Catalyst does not share subexpressions across lambda
     bodies, so without the binding the whitespace split would run three
     times per row (token count, stopword pass, caps pass). Values are
     unchanged — the identical ops run on the identical array, once.
     """
-    from dataflow_spark.functions.sparkutil import is_member, member_map
-
     cc = F.coalesce(c, F.lit(""))
     toks_expr = F.filter(F.split(F.trim(cc), r"\s+"), lambda x: x != "")
-    sw = member_map(X.STOPWORDS)
     sym = (
         F.regexp_count(cc, F.lit("#"))
         + F.regexp_count(cc, F.lit(r"\.\.\."))
@@ -236,7 +228,7 @@ def quality_score_native(c: Column) -> Column:
 
     def score_of(toks: Column, sym_n: Column) -> Column:
         n = F.size(toks)
-        stop_hits = F.size(F.filter(toks, lambda x: is_member(sw, F.lower(x))))
+        stop_hits = F.size(F.filter(toks, lambda x: is_member(F.lower(x), X.STOPWORDS)))
         caps = F.size(F.filter(toks, lambda x: (x == F.upper(x)) & x.rlike("[A-Za-z]")))
         nz = F.when(n > 0, n.cast("double"))
         stop_ratio = stop_hits / nz
@@ -250,13 +242,8 @@ def quality_score_native(c: Column) -> Column:
         )
         return F.when(n > 0, q).otherwise(F.lit(0.0))
 
-    return F.element_at(
-        F.transform(
-            F.array(F.struct(toks_expr.alias("t"), sym.alias("s"))),
-            lambda r: score_of(r["t"], r["s"]),
-        ),
-        1,
-    )
+    return bind(F.struct(toks_expr.alias("t"), sym.alias("s")),
+                lambda r: score_of(r["t"], r["s"]))
 
 
 # ----------------------------------------------------------- fingerprints
@@ -280,10 +267,7 @@ def winnowing_fingerprints_native(c: Column, k: int = 8, w: int = 16) -> Column:
     than ``k`` chars yield an empty fingerprint array."""
     # Catalyst does not CSE across lambda boundaries — an array expression
     # referenced inside transform() is RE-EVALUATED per element (O(m²)
-    # blowup). Bind each intermediate once via transform-over-1-elem-array.
-    def bind(col: Column, f) -> Column:
-        return F.element_at(F.transform(F.array(col), f), 1)
-
+    # blowup). Bind each intermediate once.
     empty = F.array().cast("array<bigint>")
     norm = F.trim(F.regexp_replace(F.lower(F.coalesce(c, F.lit(""))), r"\s+", " "))
 

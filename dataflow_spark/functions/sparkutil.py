@@ -2,39 +2,53 @@
 
 from __future__ import annotations
 
-from typing import Iterable
+import functools
+from typing import Callable, Iterable
 
-from pyspark.sql import Column
+from pyspark import SparkContext
 from pyspark.sql import functions as F
+from pyspark.sql.classic.column import Column
 
 
-def member_map(words: Iterable[str]) -> Column:
-    """Literal map for O(1) set-membership tests inside lambdas.
+def bind(col: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(col)`` with ``col`` evaluated once per row, however often
+    ``body`` references it.
 
-    ``array_contains`` over a literal array is an O(n) scan per probe —
-    for a 142-word stopword list probed once per token that dominates the
-    tokenizer itself. A map literal probes in O(1) via hash lookup.
-
-    Built as ONE ``F.expr`` SQL literal, not ``create_map(*lits)``:
-    every ``F.lit`` is a py4j round-trip, and a 142-word map costs 284
-    of them — measured ~4 s of pure DRIVER time to merely CONSTRUCT the
-    fused quality_signals projection (which embeds five such
-    dictionaries), vs 0.2 s to execute it. Words containing a single
-    quote or backslash fall back to the Column path (none of the shipped
-    dictionaries do)."""
-    ws = sorted(set(words))
-    if all("\\" not in w for w in ws):
-        items = ", ".join("'" + w.replace("'", "\\'") + "', true" for w in ws)
-        return F.expr(f"map({items})")
-    pairs: list[Column] = []
-    for w in ws:
-        pairs.append(F.lit(w))
-        pairs.append(F.lit(True))
-    return F.create_map(*pairs)
+    Catalyst does not share a subexpression across lambda bodies, nor
+    inside a ``Filter`` condition, so an array or a struct of statistics
+    referenced several times would be recomputed at each reference. Going
+    through a one-element array and ``transform`` evaluates ``col`` once
+    and hands ``body`` the lambda variable instead."""
+    return F.element_at(F.transform(F.array(col), body), 1)
 
 
-def is_member(m: Column, key: Column) -> Column:
-    return F.map_contains_key(m, key)
+def is_member(key: Column, words: Iterable[str]) -> Column:
+    """``key IN words`` as a hashed set probe: O(1) per probe however long
+    the word list.
+
+    An ``IN`` over more literals than
+    ``spark.sql.optimizer.inSetConversionThreshold`` (10) is rewritten by
+    the optimizer to ``InSet``, a hash-set lookup, also inside a
+    higher-order lambda. A literal map with ``map_contains_key`` is not a
+    hash probe: Spark rewrites it to ``array_contains(map_keys(m), k)``,
+    a scan comparing every word. Lists of at most 10 words stay a plain
+    ``IN`` of at most 10 compares.
+
+    Each word list crosses py4j once per process, as one string split in
+    the JVM (``_jvm_words``), not as one ``F.lit`` call per word."""
+    return Column(key._jc.isInCollection(_jvm_words(tuple(sorted(set(words))))))
+
+
+@functools.cache
+def _jvm_words(words: tuple[str, ...]):
+    """A JVM ``java.util.List`` of ``words``, built by three py4j calls.
+    Cached for the process: the package's word lists are a few constants."""
+    if any("\n" in w for w in words):
+        raise ValueError("a word list probed by is_member may not contain newlines")
+    jvm = SparkContext._jvm
+    if not words:
+        return jvm.java.util.ArrayList()
+    return jvm.java.util.regex.Pattern.compile("\n").splitAsStream("\n".join(words)).toList()
 
 
 def widen_for_compute(df, min_ratio: int = 2):

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataflow_spark.functions.sparkutil import bind
 from dataflow_spark.functions.text import SENTENCE_REGEX
 
 
@@ -116,12 +117,6 @@ def split_sentences(
     return out.drop(text_col)
 
 
-def _bind(col, f):
-    # Catalyst does not CSE across lambda boundaries: bind an array once
-    # via transform-over-1-element-array before referencing it per-element
-    return F.element_at(F.transform(F.array(col), f), 1)
-
-
 # sentence extraction WITHOUT lookbehind (RE2-compatible so the DuckDB
 # oracle can run the identical pattern): a sentence is a maximal run of
 # non-terminators plus its terminator run and trailing space, or a final
@@ -151,7 +146,7 @@ def split_tokens(
     pieces = F.flatten(
         F.transform(
             words,
-            lambda w: _bind(
+            lambda w: bind(
                 w,
                 lambda wb: F.transform(
                     F.sequence(
@@ -179,7 +174,7 @@ def split_tokens(
             lambda i: F.trim(F.array_join(F.slice(ps, i * step + 1, chunk_size), "")),
         )
 
-    chunks = _bind(pieces, over_pieces)
+    chunks = bind(pieces, over_pieces)
     out = df.select(*df.columns, F.posexplode(chunks).alias("chunk_idx", "chunk"))
     return out.filter(F.col("chunk") != "").drop(text_col)
 
@@ -200,7 +195,7 @@ def split_recursive(
         return F.flatten(
             F.transform(
                 arr,
-                lambda p: _bind(
+                lambda p: bind(
                     p,
                     lambda pb: F.when(
                         F.length(pb) <= chunk_size, F.array(pb)
@@ -216,7 +211,7 @@ def split_recursive(
     )
     final = descend(
         sents,
-        lambda p: _bind(
+        lambda p: bind(
             p,
             lambda pb: F.transform(
                 F.sequence(
@@ -297,14 +292,14 @@ def split_semantic(
                         ),
                     )
 
-                return _bind(ids, over_ids)
+                return bind(ids, over_ids)
 
-            return _bind(flags, over_flags)
+            return bind(flags, over_flags)
 
         return F.when(F.size(ss) == 0, F.array().cast("array<string>")).otherwise(
-            _bind(toksets, over_toks)
+            bind(toksets, over_toks)
         )
 
-    chunks = _bind(sents, over_sents)
+    chunks = bind(sents, over_sents)
     out = df.select(*df.columns, F.posexplode(chunks).alias("chunk_idx", "chunk"))
     return out.filter(F.trim(F.col("chunk")) != "").drop(text_col)

@@ -1,5 +1,6 @@
 """Print formatted physical plans for headline queries + plan-quality
-checks (pushed filters, pruned schemas, codegen spans, broadcast joins).
+checks (pushed filters, pruned schemas, codegen spans, broadcast joins,
+expensive expressions repeated inside one Filter condition).
 
 Usage: python tools/explain_plans.py [sf_dir] > PLANS.md
 """
@@ -8,6 +9,7 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -72,6 +74,42 @@ HEADLINE = [
 ]
 
 
+# calls that build one object per match or token; a Filter condition
+# has no subexpression elimination, so each repeat costs the full call
+EXPENSIVE_CALLS = ("regexp_extract_all(", "split(")
+
+
+def _calls(text: str, head: str):
+    """Every ``head...)`` call in ``text``, up to its matching paren."""
+    i = text.find(head)
+    while i >= 0:
+        depth, j = 0, i + len(head) - 1
+        for j in range(j, len(text)):
+            depth += {"(": 1, ")": -1}.get(text[j], 0)
+            if depth == 0:
+                break
+        yield text[i : j + 1]
+        i = text.find(head, i + 1)
+
+
+def repeated_in_filters(jplan) -> dict[str, int]:
+    """``{call: times}`` for each EXPENSIVE_CALLS call written more than
+    once in one Filter condition of the (JVM) plan tree ``jplan``."""
+    out: dict[str, int] = {}
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Filter":
+            cond = node.condition().toString()
+            counts = Counter(c for head in EXPENSIVE_CALLS for c in _calls(cond, head))
+            for call, n in counts.items():
+                if n > 1:
+                    out[call] = max(n, out.get(call, 0))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from dataflow_spark.entry_queries import build_queries
@@ -90,6 +128,7 @@ def main() -> None:
             "broadcast join used": "BroadcastHashJoin" in plan or "Broadcast" in plan,
             "python on hot path": "BatchEvalPython" in plan,
             "aqe final plan": "isFinalPlan=true" in plan or "AdaptiveSparkPlan" not in plan,
+            "repeated in a filter": repeated_in_filters(df._jdf.queryExecution().optimizedPlan()),
         }
         explained = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
